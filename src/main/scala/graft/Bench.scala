@@ -29,9 +29,21 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  def buildSession(cpus: String): SparkSession = {
+  /** SPARK_GRAFT_CPUS: local worker threads, and the default shuffle
+    * width. Defaults to every core of the box. */
+  val defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The one session factory: Bench, Verify, Explain, the audit mains,
+    * Demo and the spec suite all run on the session built here, so the
+    * plans that are benched are the plans that are verified and
+    * spec'd. The session loads [[graft.plans.GraftExtensions]], which
+    * installs every graft kernel, the top-k strategy and its filter
+    * pushdown. SPARK_GRAFT_MASTER overrides the `local[cpus]` master.
+    */
+  def buildSession(cpus: String = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       // SPARK_GRAFT_SHUFFLE: decouple reducer count from thread count
       // (a 32-partition shuffle that spills at sf10 is an instrument
       // wall, not a plan defect — a 1000-executor cluster would run
@@ -43,11 +55,11 @@ object Bench {
       .config("spark.sql.codegen.maxFields", "300")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
-    // ERROR, not WARN: every op body re-registers the graft kernels and
-    // log4j's "function replaced" WARN × 88 queries × runs put thousands
-    // of lines ahead of the final summary — a head-truncated capture
-    // then lost the one line that matters (BENCH_r05 parsed null)
+    // ERROR, not WARN: Bench's last stdout line is its driver contract
+    // and a head-truncated capture must not lose it behind log lines;
+    // the benchmark measures this session, so the level stays fixed
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
@@ -179,8 +191,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = buildSession(cpus)
+    val spark = buildSession()
     warmup(spark, sfDir)
 
     // SPARK_GRAFT_ONLY=a,b,c — optional filter for targeted local runs
@@ -221,7 +232,7 @@ object Bench {
       .orElse(Some("tools/prev_round/graft-prev.jar"))
       .filter(p => p != "none" && p.nonEmpty && only.isEmpty &&
         java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-    val prev = prevJar.flatMap(j => runPrevJar(j, sfDir, runs, cpus))
+    val prev = prevJar.flatMap(j => runPrevJar(j, sfDir, runs, defaultCpus))
     val prevField = prev.map(j => s""","prev_code_same_session":$j""")
       .getOrElse("")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end executable documentation: corpus in → sectioned docs →
@@ -16,14 +15,7 @@ object Demo {
       else "/root/reference/datasets/en-zh-short.en/*.txt"
     val outDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-demo").toString
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.buildSession()
 
     // 1. ingest: line corpus → documents (datasets/parse.py semantics)
     val docs = sources.Corpus.readSectioned(spark, corpus)

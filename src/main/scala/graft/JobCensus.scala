@@ -25,7 +25,7 @@ object JobCensus {
     // time they don't need fresh-JVM isolation) — N sbt startups → 1
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
+    val cpus = if (args.length > 2) args(2) else Bench.defaultCpus
     val runs = if (args.length > 3) args(3).toInt else 3
     val spark = Bench.buildSession(cpus)
     Bench.warmup(spark, sfDir)

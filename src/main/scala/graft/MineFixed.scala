@@ -28,8 +28,7 @@ object MineFixed {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/tmp/graft_sf1", "/tmp/graft_sf10")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = Bench.buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.plans.GraftFunctions.register(spark)
+    val spark = Bench.buildSession()
     Bench.warmup(spark, dirs.head)
 
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }

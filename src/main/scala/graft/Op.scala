@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** One inventory row from SURVEY.md §2: a Spark query plus (when the
   * semantics are ANSI-expressible) a DuckDB oracle over the same tables.
@@ -30,8 +29,4 @@ object Fns {
   def sumMoney(c: Column): Column = sum(cents(c)) / 100.0
   def sumMoneySql(e: String): String =
     s"(SUM(${centsSql(e)}) / 100.0)"
-
-  /** Back-compat aliases used by a few call sites. */
-  def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  def decSql(e: String): String = s"CAST($e AS DECIMAL(18,2))"
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Rerank-width cost/recall sweep (VERDICT r14 #3): the r14 artifact
@@ -22,8 +22,7 @@ object RerankCost {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = Bench.buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    graft.plans.GraftFunctions.register(spark)
+    val spark = Bench.buildSession()
     Bench.warmup(spark, sfDir)
 
     def collectTopK(df: DataFrame, k: Int): Map[Long, Set[Long]] =

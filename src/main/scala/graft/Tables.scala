@@ -78,4 +78,12 @@ object Tables {
     }
     if (leafParts.nonEmpty && leafParts.max < par) d.repartition(par) else d
   }
+
+  /** Counted broadcast guard for a join side whose size grows with the
+    * corpus: broadcast `d` only when its MEASURED row count `rows` is
+    * at most `maxRows`; above the bound the count overrides any stats
+    * estimate and the join is forced to a shuffled hash join (no sort
+    * on either side). */
+  def broadcastIfSmall(d: DataFrame, rows: Long, maxRows: Long): DataFrame =
+    if (rows <= maxRows) broadcast(d) else d.hint("shuffle_hash")
 }

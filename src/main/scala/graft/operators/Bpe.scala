@@ -153,7 +153,6 @@ object Bpe {
   private val opEncode = Op(
     "bpe_encode",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val merges = trainFromDocs(docs(s, dir), BpeMerges)
       docs(s, dir)
         .withColumn("toks", TextFns.tokens(col("text")))
@@ -179,7 +178,6 @@ object Bpe {
   private val opChunkBpe = Op(
     "mr_chunk_bpe",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val merges = trainFromDocs(docs(s, dir), BpeMerges)
       val cl = MapReduceDocs.ChunkLen
       val mb = MapReduceDocs.MergeBelow

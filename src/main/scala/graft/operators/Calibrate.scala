@@ -96,7 +96,6 @@ object Calibrate {
     * [[graft.sources.CalibrationStore]] persists and every serving
     * path (batch sketch mode, streaming gate) probes. */
   private[graft] def calibrationModel(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     scored(d)
       .groupBy(col("source"))
       .agg(
@@ -111,7 +110,6 @@ object Calibrate {
     * rank, keep at the same global floor. Narrow per-row work; no
     * sort, no window. */
   private[graft] def calibrateFrom(d: DataFrame, model: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     scored(d).as("d")
       .join(broadcast(model).as("m"), col("d.source") === col("m.source"))
       .select(col("doc_id"), col("d.source").as("source"),

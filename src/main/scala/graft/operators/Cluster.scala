@@ -71,7 +71,6 @@ object Cluster {
       cents: Array[(Int, Array[Float])]): DataFrame = {
     require(cents.nonEmpty && cents.length <= Similarity.KmeansMaxK,
       s"centroid set must hold 1..${Similarity.KmeansMaxK}")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.withColumn("__cents", typedLit(cents.toSeq))
       .withColumn("__best", expr(
         "array_max(transform(__cents, c -> " +

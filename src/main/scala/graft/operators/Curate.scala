@@ -142,8 +142,7 @@ object Curate {
     // reads the blocks instead of re-running the corpus scan.
     val keepIds = qf.filter(col("qf_keep") === 1L).select("doc_id")
     val keepSide =
-      if (nKeep <= Dedup.SpanBroadcastMaxRows) broadcast(keepIds)
-      else keepIds.hint("shuffle_hash")
+      Tables.broadcastIfSmall(keepIds, nKeep, Dedup.SpanBroadcastMaxRows)
     // stage 2: the TRAINED quality gate rides the SAME survivor gather
     // as a narrow per-row fold (frozen weights are a plan literal) —
     // heuristic keepers below the model's keep probability never enter
@@ -214,7 +213,6 @@ object Curate {
   private val opCurate = Op(
     "curate_e2e",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val d = Tables(s, dir, "documents")
       // the driver query trains its own frozen model first (Gopher
       // weak labels, 80% split, TrainCap-bounded) — a deployment would

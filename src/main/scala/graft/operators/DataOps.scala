@@ -339,7 +339,7 @@ object DataOps {
       numBuckets = (maxSrc + 1) * srcBkts, out = "gcum")
     val (_, srcStart) = Search.guarded(
       cum.groupBy(col("src_idx")).agg(min(col("gcum")).as("src0")),
-      broadcastMaxRows = 4000000L)
+      broadcastMaxRows = Dedup.SpanBroadcastMaxRows)
     val placed = cum.join(srcStart, "src_idx")
       .withColumn("pos", col("gcum") - col("src0"))
       .withColumn("seg_id", expr(s"pos DIV $StitchLen"))

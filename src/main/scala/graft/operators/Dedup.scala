@@ -51,7 +51,6 @@ object Dedup {
     * (contam_ngram) and position carry (dedup_span).
     */
   private[graft] def shingleSets(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     d.withColumn("toks", TextFns.tokens(col("text")))
       .select(col("doc_id"), expr("graft_shingle_set(toks)").as("sset"))
   }
@@ -118,7 +117,6 @@ object Dedup {
     * for what was never an aggregation problem.)
     */
   private[graft] def minhashSigs(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     // ONE fused kernel computes signature + bands; sig and bands are
     // cheap slices of its 40-long output. The old shape derived bands
     // from the sig COLUMN via an 8-element transform lambda — a
@@ -271,7 +269,6 @@ object Dedup {
     * are bit-identical (same token hash, same majority rule).
     */
   private[graft] def simhashOf(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     d.withColumn("toks", TextFns.tokens(col("text")))
       .select(col("doc_id"), expr("graft_simhash(toks)").as("simhash"))
   }
@@ -612,13 +609,8 @@ object Dedup {
       .select(col("span"))
       .withColumn("is_boiler", lit(true))
       .localCheckpoint()
-    // counted broadcast guard: only a provably small boiler set is
-    // pinned on the driver + every executor; above the bound the
-    // MEASURED count overrides any stats estimate and the join is
-    // forced to a shuffled hash join (no sort needed on either side)
     val boilerSide =
-      if (boiler.count() <= broadcastMaxRows) broadcast(boiler)
-      else boiler.hint("shuffle_hash")
+      Tables.broadcastIfSmall(boiler, boiler.count(), broadcastMaxRows)
     val flagged = spans.join(boilerSide, Seq("span"), "left")
       .withColumn("keep", col("is_boiler").isNull)
     flagged.groupBy(col("doc_id"))
@@ -728,15 +720,15 @@ object Dedup {
         .union(lblEdges.select(col("doc_id").as("x"), col("lbl").as("y")))
       val lblSide = lbls.select(col("doc_id").as("y"), col("lbl"))
       val nbrMin = prop
-        .join(if (n <= SpanBroadcastMaxRows) broadcast(lblSide)
-              else lblSide.hint("shuffle_hash"), Seq("y"))
+        .join(Tables.broadcastIfSmall(lblSide, n, SpanBroadcastMaxRows),
+          Seq("y"))
         .groupBy(col("x")).agg(min(col("lbl")).as("nlbl"))
         .withColumnRenamed("x", "doc_id")
       // nbrMin has at most one row per edge-touched node — the same n
       // bounds it, so one guard serves both joins
       lbls
-        .join(if (n <= SpanBroadcastMaxRows) broadcast(nbrMin)
-              else nbrMin.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .join(Tables.broadcastIfSmall(nbrMin, n, SpanBroadcastMaxRows),
+          Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
         .localCheckpoint(eager = false)
@@ -753,8 +745,8 @@ object Dedup {
       iter += 1
     }
     nodes.select(col("doc_id"))
-      .join(if (n <= SpanBroadcastMaxRows) broadcast(labels)
-            else labels.hint("shuffle_hash"), Seq("doc_id"), "left")
+      .join(Tables.broadcastIfSmall(labels, n, SpanBroadcastMaxRows),
+        Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
   }
 
@@ -842,8 +834,7 @@ object Dedup {
     // the gather degrades to the unavoidable shuffle of exactly the
     // touched texts.
     def counted(f: DataFrame): DataFrame =
-      if (f.count() <= SpanBroadcastMaxRows) broadcast(f)
-      else f.hint("shuffle_hash")
+      Tables.broadcastIfSmall(f, f.count(), SpanBroadcastMaxRows)
     val reps = d.select(col("doc_id"), col("text"))
       .join(counted(groups), col("doc_id") === col("rep_id"))
       .select(col("doc_id"), col("m"), col("text"))
@@ -1461,7 +1452,6 @@ object Dedup {
     */
   private[graft] def bloomGateFrom(fresh: DataFrame,
       histHash: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(fresh.sparkSession)
     // size the sketch from the ACTUAL store cardinality (bounded
     // driver scalar, the counted-guard precedent): the 1-arg default
     // assumes 1M items and silently SATURATES at a billion-hash store

@@ -214,7 +214,6 @@ object Dsir {
     * the sketch mode applies inline and `sources.DsirStore` persists
     * for serving (the LmModel refreshCuts analog). */
   private[graft] def sketchCut(w: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(w.sparkSession)
     w.agg(expr("graft_kll_agg(CAST(llr_bits AS DOUBLE))").as("sk"))
       .select(expr("graft_kll_quantile(sk, CAST(0.9 AS DOUBLE))")
         .as("cut"))

@@ -435,7 +435,6 @@ object LangModel {
     * max-over-bucket then also saturates at the largest scored ord).
     */
   private[graft] def cutsFromPerDoc(perDoc: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(perDoc.sparkSession)
     perDoc.groupBy(col("lang"))
       .agg(count(lit(1)).as("nl"),
         sum(lit(1L) - col("no_bg")).as("ns"),

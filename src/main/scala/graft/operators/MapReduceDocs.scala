@@ -338,7 +338,6 @@ object MapReduceDocs {
   private val opF1 = Op(
     "score_f1",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val scored = pairs(s, dir)
         .withColumn("pt", TextFns.tokens(col("pred")))
         .withColumn("gtt", TextFns.tokens(col("gt")))
@@ -438,7 +437,6 @@ object MapReduceDocs {
   private val opStatsSketch = Op(
     "score_stats_sketch",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val e = Tables.events(s, dir)
       e.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -626,7 +624,6 @@ object MapReduceDocs {
     // against reference counts — grams on one side only contribute
     // min(·, 0) = 0). The DuckDB oracle keeps the expanded
     // relational form.
-    graft.plans.GraftFunctions.register(pairs.sparkSession)
     pairs
       .withColumn("bc", expr("graft_bleu_counts(pt, gt)"))
       .select(col("doc_id"),
@@ -746,7 +743,6 @@ object MapReduceDocs {
   private val opRougeL = Op(
     "score_rougeL",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val d = docs(s, dir)
         .withColumn("toks10",
           slice(TextFns.tokens(TextFns.normalize(col("text"))), 1, 10))
@@ -820,7 +816,6 @@ object MapReduceDocs {
   private val opRouge1 = Op(
     "score_rouge1",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val d = docs(s, dir)
         .withColumn("toks10",
           slice(TextFns.tokens(TextFns.normalize(col("text"))), 1, 10))
@@ -881,7 +876,6 @@ object MapReduceDocs {
   private val opRouge2 = Op(
     "score_rouge2",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val bigrams = expr(
         "zip_with(slice(st, 1, greatest(size(st) - 1, 0)), " +
           "slice(st, 2, greatest(size(st) - 1, 0)), " +

@@ -287,7 +287,6 @@ object Multimodal {
     "mm_meta",
     (s, dir) => {
       import s.implicits._
-      graft.plans.GraftFunctions.register(s)
       ingest(Tables(s, dir, "documents")
         .select(col("doc_id"),
           col("text").cast("binary").as("payload"))
@@ -408,7 +407,6 @@ object Multimodal {
     "mm_phash",
     (s, dir) => {
       import s.implicits._
-      graft.plans.GraftFunctions.register(s)
       // materialized once: the frame feeds BOTH the band pair search
       // and the final per-doc join — without the pin each branch
       // re-runs the payload synthesis AND the full PNG pixel decode
@@ -706,7 +704,6 @@ object Multimodal {
     "mm_resize",
     (s, dir) => {
       import s.implicits._
-      graft.plans.GraftFunctions.register(s)
       ingest(Tables(s, dir, "documents")
           .select(col("doc_id"), col("text").cast("binary").as("payload"))
           .as[MMIn])
@@ -779,7 +776,6 @@ object Multimodal {
     // `% 0` would silently drop every frame (NULL predicate) in
     // non-ANSI mode and crash under ANSI — surface the misuse instead
     require(stride >= 1, s"sampleFrames: stride must be >= 1, got $stride")
-    graft.plans.GraftFunctions.register(clipFrame.sparkSession)
     clipFrame
       .select(col("doc_id"),
         posexplode(col("frames")).as(Seq("frame_idx", "frame")))
@@ -892,7 +888,6 @@ object Multimodal {
     "mm_audio",
     (s, dir) => {
       import s.implicits._
-      graft.plans.GraftFunctions.register(s)
       // materialized once: feeds the band pair search AND the final
       // per-doc join (the mm_phash lesson — without the pin each
       // branch re-runs synthesis + PCM decode)
@@ -1162,7 +1157,6 @@ object Multimodal {
     "mm_video_dedup",
     (s, dir) => {
       import s.implicits._
-      graft.plans.GraftFunctions.register(s)
       val fh = sampleFrames(clipsWithCopies(graft.Tables.rebalance(
           Tables(s, dir, "documents")
             .select(col("doc_id"), col("text").cast("binary").as("payload")))
@@ -1330,7 +1324,6 @@ object Multimodal {
     * scene boundaries and hand-built [A,A,B] fixtures.
     */
   private[graft] def sceneCuts(clipFrame: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(clipFrame.sparkSession)
     clipFrame
       .withColumn("steps", expr(s"""
         CASE WHEN size(frames) < 2 THEN CAST(array() AS array<int>)

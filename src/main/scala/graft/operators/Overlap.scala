@@ -95,7 +95,6 @@ object Overlap {
     * constant-size partials, the frame overlap_sketch self-joins and
     * any fleet rollup would union (`graft_theta_merge`). */
   private[graft] def vocabSketches(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     d.select(col("source"), explode(TextFns.tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(col("source"))

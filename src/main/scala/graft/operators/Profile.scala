@@ -263,7 +263,6 @@ object Profile {
   // semantics are insensitive to it. Rows-only (KLL compaction is
   // randomized); the spec bounds sketch-vs-exact flag disagreement.
   private[graft] def outlierMadSketch(ev: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(ev.sparkSession)
     madShape(ev, c => expr(
       s"graft_kll_quantile(graft_kll_agg(CAST($c AS DOUBLE)), 0.5D)"))
   }

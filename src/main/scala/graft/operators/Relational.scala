@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Design notes for 100 TB (SURVEY.md §4): dimension joins are
   * broadcast-hinted; fact-fact joins shuffle on their join keys and rely
   * on AQE for skew; every aggregate the oracle compares sums exact
-  * decimals (see [[graft.Fns.dec]]) so results are order-independent.
+  * long cents (see [[graft.Fns.cents]]) so results are order-independent.
   */
 object Relational {
 

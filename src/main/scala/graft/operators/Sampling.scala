@@ -74,7 +74,6 @@ object Sampling {
   private val opStrat = Op(
     "sample_stratified",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       sampleStratified(Tables(s, dir, "documents"))
     },
     Some(s"""
@@ -278,7 +277,6 @@ object Sampling {
   // compaction is randomized); spec bounds each cutoff's empirical
   // rank and the resulting bin-population balance.
   private[graft] def quantileBinsSketch(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     val sized = d.select(col("doc_id"),
       size(TextFns.tokens(col("text"))).cast("long").as("n_toks"))
     val cuts = sized.agg(
@@ -341,7 +339,6 @@ object Sampling {
   private val opSpanCorrupt = Op(
     "span_corrupt",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Tables(s, dir, "documents")
         .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
         .withColumn("ct", expr("graft_span_corrupt(toks, doc_id)"))

@@ -187,7 +187,6 @@ object Search {
   val PhraseTerms = Seq("hash", "join")
 
   private[graft] def phraseHits(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     // one codegen Java loop per row (plans.PhraseHits) — the
     // filter(sequence…) column-expression equivalent runs its lambda
     // interpreted per position: 1.7 s vs 0.3 s at sf0.1
@@ -254,7 +253,6 @@ object Search {
   private[graft] def hybridRrfScores(textScores: DataFrame,
       embs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(embs.sparkSession)
     val text = textScores
       .orderBy(col("score").desc, col("doc_id")).limit(RrfPoolK)
       .select(col("doc_id").as("id"),
@@ -497,10 +495,7 @@ object Search {
   private[graft] def guarded(f: DataFrame,
       broadcastMaxRows: Long): (DataFrame, DataFrame) = {
     val m = f.localCheckpoint(eager = false)
-    val side =
-      if (m.count() <= broadcastMaxRows) broadcast(m)
-      else m.hint("shuffle_hash")
-    (m, side)
+    (m, Tables.broadcastIfSmall(m, m.count(), broadcastMaxRows))
   }
 
   /** Rarest-first query-term derivation — (q_id, token), ≤
@@ -578,7 +573,6 @@ object Search {
   private val opHardneg = Op(
     "mine_hardneg",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       hardNegatives(Tables(s, dir, "documents"))
     },
     Some(s"""

@@ -33,7 +33,6 @@ object Similarity {
   private val opBrute = Op(
     "ann_cosine_topk",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -213,7 +212,6 @@ object Similarity {
   private[graft] def ivfRank(s: SparkSession, dir: String, mode: String,
       candPred: Option[org.apache.spark.sql.Column] = None,
       probeBoost: Int = 1, rerankK: Int = RerankK): DataFrame = {
-      graft.plans.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       // k ∝ √n capped at KmeansMaxK (see its doc for the bounded
       // training-cost formula): cells stay O(√n) wide until the cap,
@@ -425,7 +423,6 @@ object Similarity {
     * Java loop per row.
     */
   private[graft] def lshCandidatePairs(e: DataFrame, bits: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(e.sparkSession)
     val bandRows = e
       .withColumn("keys",
         expr(s"graft_lsh_keys(embedding, $EmbBands, $EmbMaxBits, $bits)"))
@@ -464,7 +461,6 @@ object Similarity {
   private val opEmbedDedup = Op(
     "dedup_embed",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings")
       nearDupCounts(e, 0.8, embBits(e.count()))
     },
@@ -582,7 +578,6 @@ object Similarity {
   private val opQuantAnn = Op(
     "ann_quantized",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -710,7 +705,6 @@ object Similarity {
     * RerankCost sweep entry; the op serves the [[RerankK]] default). */
   private[graft] def pqRank(s: SparkSession, dir: String,
       rerankK: Int = RerankK): DataFrame = {
-      graft.plans.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings")
       val (cb, kEff) = pqCodebook(e, PqM, PqK, KmeansIters)
       val cbLit = lit(cb)
@@ -777,7 +771,6 @@ object Similarity {
   val SemMaxCluster = 256L
 
   private[graft] def semanticDedup(e: DataFrame, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(e.sparkSession)
     val cents = kmeansCentroids(e, k, KmeansIters)
     // skinny (vec_id, cluster) rows, consumed by BOTH the pair path and
     // the final output join — checkpointed so the assignment scan above
@@ -914,7 +907,6 @@ object Similarity {
     * miner and the persisted bitext index (sources.BitextIndex). */
   private[graft] def mineBandRows(e: DataFrame, idName: String,
       bits: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(e.sparkSession)
     e.withColumn("keys",
         expr(s"graft_lsh_keys(embedding, $EmbBands, $EmbMaxBits, $bits)"))
       .select(col("vec_id").as(idName),
@@ -940,7 +932,6 @@ object Similarity {
 
   private[graft] def mineBitext(src: DataFrame, tgt: DataFrame,
       bits: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(src.sparkSession)
     // scored once, consumed three times (fwd pool, bwd pool, margin
     // join) — pin the skinny frame (same single-box note as
     // simhashPairs; a cluster run persists instead). LAZY (r19): the
@@ -1058,7 +1049,6 @@ object Similarity {
   private val opRange = Op(
     "ann_range_search",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val e = Tables(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1099,7 +1089,6 @@ object Similarity {
   private val opHashEmbed = Op(
     "embed_hash",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       graft.Tables(s, dir, "documents")
         .withColumn("embedding",
           expr("graft_hash_embed(split(text, ' '))"))

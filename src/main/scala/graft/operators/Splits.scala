@@ -121,7 +121,6 @@ object Splits {
   private val opSplitLeakage = Op(
     "split_leakage",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       splitLeakage(docs(s, dir))
     },
     // Full oracle since r17: Dedup.pipelineOracleCtes replays the LSH
@@ -301,10 +300,8 @@ object Splits {
     val marked = evalBands.select(col("band_val")).distinct()
       .withColumn("hit", lit(true))
       .localCheckpoint(eager = false)
-    val evalSide =
-      if (marked.count() <= Dedup.SpanBroadcastMaxRows)
-        broadcast(marked)
-      else marked.hint("shuffle_hash")
+    val evalSide = Tables.broadcastIfSmall(marked, marked.count(),
+      Dedup.SpanBroadcastMaxRows)
     poolBands
       .join(evalSide, Seq("band_val"), "left")
       .groupBy(col("doc_id"))
@@ -334,7 +331,6 @@ object Splits {
   private val opContamMinhash = Op(
     "contam_minhash",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       contamMinhash(docs(s, dir))
     },
     // Full oracle since r17: per-doc band values via the shared

@@ -176,7 +176,6 @@ object TextAnalysis {
   // non-NFC rate is the ingest dashboard number. Pure per-row
   // projection — scan speed at 100 TB.
   private[graft] def textNfc(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     d.withColumn("nfc", expr("graft_nfc(text)"))
       .select(col("doc_id"),
         length(col("text")).cast("long").as("raw_chars"),
@@ -457,7 +456,6 @@ object TextAnalysis {
       ndl: org.apache.spark.sql.Column) = round((nl - ndl) / nl, 6)
 
   private[graft] def repetitionSignals(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     d.withColumn("tg", expr(
         "graft_top_ngram_count(split(text, ' '), 2)"))
       .select(col("doc_id"),
@@ -577,7 +575,6 @@ object TextAnalysis {
   private val opVocabSketch = Op(
     "vocab_topk_sketch",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val toks = docs(s, dir)
         .select(explode(TextFns.tokens(col("text"))).as("token"))
       val sk = toks.agg(
@@ -610,7 +607,6 @@ object TextAnalysis {
   private val opVocabCms = Op(
     "vocab_cms",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val toks = docs(s, dir)
         .select(col("lang"), explode(TextFns.tokens(col("text"))).as("token"))
         .filter(length(col("token")) > 0)
@@ -635,7 +631,6 @@ object TextAnalysis {
   private val opCompress = Op(
     "text_compress",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       docs(s, dir)
         .withColumn("n_bytes",
           length(col("text")).cast("long"))
@@ -676,7 +671,6 @@ object TextAnalysis {
     * optimization round — the old shape ran two full corpus scans).
     */
   private[graft] def qfWithSignals(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     val base = withLangSignals(d)
       .withColumn("_qf_toks", TextFns.tokens(col("text")))
       .withColumn("n_toks", size(col("_qf_toks")).cast("long"))
@@ -809,7 +803,6 @@ object TextAnalysis {
   private val opKeywords = Op(
     "keyword_tfidf",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       keywordTfidf(docs(s, dir))
     },
     Some(s"""
@@ -1054,7 +1047,6 @@ object TextAnalysis {
     * repetition ceiling.
     */
   private[graft] def gopherSignals(d: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(d.sparkSession)
     val stopHits = GopherStops.map(w =>
       when(array_contains(col("_g_toks"), w), 1L).otherwise(0L))
       .reduce(_ + _)

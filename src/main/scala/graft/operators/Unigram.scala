@@ -202,7 +202,6 @@ object Unigram {
   private val opEncode = Op(
     "tok_unigram_encode",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val table = trainFromDocs(docs(s, dir))
       docs(s, dir)
         .withColumn("toks", TextFns.tokens(col("text")))
@@ -240,7 +239,6 @@ object Unigram {
   private val opFertility = Op(
     "tok_fertility",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val d = docs(s, dir)
       // one word-count scan feeds BOTH bounded trainings
       val wc = Bpe.wordCounts(d)

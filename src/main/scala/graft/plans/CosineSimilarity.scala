@@ -1,12 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression: cosine similarity of two float vectors.
   *
@@ -80,474 +77,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registers graft's native functions. Production sessions use
-  * `spark.sql.extensions=graft.plans.GraftExtensions`; `register` is
-  * the runtime path for sessions created without the conf.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineDescriptor)
-    ext.injectFunction(GraftFunctions.cosineI8Descriptor)
-    ext.injectFunction(GraftFunctions.lcsDescriptor)
-    ext.injectFunction(GraftFunctions.stemDescriptor)
-    ext.injectFunction(GraftFunctions.lshKeysDescriptor)
-    ext.injectFunction(GraftFunctions.simhashDescriptor)
-    ext.injectFunction(GraftFunctions.minhashSigDescriptor)
-    ext.injectFunction(GraftFunctions.minhashBandsDescriptor)
-    ext.injectFunction(GraftFunctions.minhashAllDescriptor)
-    ext.injectFunction(GraftFunctions.normalizeDescriptor)
-    ext.injectFunction(GraftFunctions.shingleSetDescriptor)
-    ext.injectFunction(GraftFunctions.bleuCountsDescriptor)
-    ext.injectFunction(GraftFunctions.bleuSmoothDescriptor)
-    ext.injectFunction(GraftFunctions.deflateLenDescriptor)
-    ext.injectFunction(GraftFunctions.f1CommonDescriptor)
-    ext.injectFunction(GraftFunctions.bpeDescriptor)
-    ext.injectFunction(GraftFunctions.pqEncodeDescriptor)
-    ext.injectFunction(GraftFunctions.pqCosDescriptor)
-    ext.injectFunction(GraftFunctions.pqTableDescriptor)
-    ext.injectFunction(GraftFunctions.pqCosTableDescriptor)
-    ext.injectFunction(GraftFunctions.mediaMetaDescriptor)
-    ext.injectFunction(GraftFunctions.phraseHitsDescriptor)
-    ext.injectFunction(GraftFunctions.spanCorruptDescriptor)
-    ext.injectFunction(GraftFunctions.gopherRepDescriptor)
-    ext.injectFunction(GraftFunctions.topGramDescriptor)
-    ext.injectFunction(GraftFunctions.lumaResizeDescriptor)
-    ext.injectFunction(GraftFunctions.bloomAggDescriptor)
-    ext.injectFunction(GraftFunctions.bloomContainsDescriptor)
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectOptimizerRule(_ => PushFilterThroughTopK)
-  }
-}
-
-object GraftFunctions {
-  private[plans] val cosineDescriptor = (
-    FunctionIdentifier("graft_cosine"),
-    new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-    (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1)): Expression)
-
-  private[plans] val cosineI8Descriptor = (
-    FunctionIdentifier("graft_cosine_i8"),
-    new ExpressionInfo(classOf[CosineFloatInt8].getName, "graft_cosine_i8"),
-    (exprs: Seq[Expression]) => CosineFloatInt8(exprs.head, exprs(1)): Expression)
-
-  private[plans] val lcsDescriptor = (
-    FunctionIdentifier("graft_lcs"),
-    new ExpressionInfo(classOf[LcsLength].getName, "graft_lcs"),
-    (exprs: Seq[Expression]) => LcsLength(exprs.head, exprs(1)): Expression)
-
-  private[plans] val stemDescriptor = (
-    FunctionIdentifier("graft_stem"),
-    new ExpressionInfo(classOf[StemTokens].getName, "graft_stem"),
-    (exprs: Seq[Expression]) => StemTokens(exprs.head): Expression)
-
-  private[plans] val lshKeysDescriptor = (
-    FunctionIdentifier("graft_lsh_keys"),
-    new ExpressionInfo(classOf[LshBandKeys].getName, "graft_lsh_keys"),
-    (exprs: Seq[Expression]) => LshBandKeys(exprs.head,
-      exprs(1).eval().asInstanceOf[Int],
-      exprs(2).eval().asInstanceOf[Int],
-      exprs(3).eval().asInstanceOf[Int]): Expression)
-
-  private[plans] val simhashDescriptor = (
-    FunctionIdentifier("graft_simhash"),
-    new ExpressionInfo(classOf[SimhashExpr].getName, "graft_simhash"),
-    (exprs: Seq[Expression]) => SimhashExpr(exprs.head): Expression)
-
-  private[plans] val minhashSigDescriptor = (
-    FunctionIdentifier("graft_minhash_sig"),
-    new ExpressionInfo(classOf[MinhashSigExpr].getName, "graft_minhash_sig"),
-    (exprs: Seq[Expression]) => MinhashSigExpr(exprs.head): Expression)
-
-  private[plans] val minhashBandsDescriptor = (
-    FunctionIdentifier("graft_minhash_bands"),
-    new ExpressionInfo(classOf[MinhashBandsExpr].getName, "graft_minhash_bands"),
-    (exprs: Seq[Expression]) => MinhashBandsExpr(exprs.head): Expression)
-
-  private[plans] val bleuCountsDescriptor = (
-    FunctionIdentifier("graft_bleu_counts"),
-    new ExpressionInfo(classOf[BleuCountsExpr].getName, "graft_bleu_counts"),
-    (exprs: Seq[Expression]) => BleuCountsExpr(exprs.head, exprs(1)): Expression)
-
-  private[plans] val shingleSetDescriptor = (
-    FunctionIdentifier("graft_shingle_set"),
-    new ExpressionInfo(classOf[ShingleSetExpr].getName, "graft_shingle_set"),
-    (exprs: Seq[Expression]) => ShingleSetExpr(exprs.head): Expression)
-
-  private[plans] val normalizeDescriptor = (
-    FunctionIdentifier("graft_normalize"),
-    new ExpressionInfo(classOf[NormalizeTextExpr].getName, "graft_normalize"),
-    (exprs: Seq[Expression]) => NormalizeTextExpr(exprs.head): Expression)
-
-  private[plans] val minhashAllDescriptor = (
-    FunctionIdentifier("graft_minhash_all"),
-    new ExpressionInfo(classOf[MinhashAllExpr].getName, "graft_minhash_all"),
-    (exprs: Seq[Expression]) => MinhashAllExpr(exprs.head): Expression)
-
-  // Spark's OWN runtime-filter bloom machinery (BloomFilterAggregate /
-  // BloomFilterMightContain) surfaced as callable functions — the
-  // engine ships the constant-size sketch + membership probe but only
-  // wires them into its internal join-filter rule; the ingest_bloom
-  // pre-gate calls them directly. 1-arg agg form uses the session's
-  // runtime-filter size defaults; the 3-arg form pins (items, bits).
-  private[plans] val bloomAggBuilder = (exprs: Seq[Expression]) =>
-    (exprs.size match {
-      case 1 => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head)
-      case 2 => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1))
-      case _ => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1), exprs(2))
-    }): Expression
-
-  private[plans] val bloomContainsBuilder = (exprs: Seq[Expression]) =>
-    new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-      exprs.head, exprs(1)): Expression
-
-  private[plans] val bloomAggDescriptor = (
-    FunctionIdentifier("graft_bloom_agg"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-      "graft_bloom_agg"),
-    bloomAggBuilder)
-
-  private[plans] val bloomContainsDescriptor = (
-    FunctionIdentifier("graft_bloom_contains"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-      "graft_bloom_contains"),
-    bloomContainsBuilder)
-
-  private[plans] val bleuSmoothDescriptor = (
-    FunctionIdentifier("graft_bleu_smooth"),
-    new ExpressionInfo(classOf[BleuSmoothExpr].getName, "graft_bleu_smooth"),
-    (exprs: Seq[Expression]) => BleuSmoothExpr(exprs.head): Expression)
-
-  private[plans] val bpeBuilder =
-    (exprs: Seq[Expression]) => {
-      val arr = exprs(1).eval()
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val merges = (0 until arr.numElements())
-        .map(i => arr.getUTF8String(i).toString)
-      BpeEncodeExpr(exprs.head, merges): Expression
-    }
-
-  private[plans] val bpeDescriptor = (
-    FunctionIdentifier("graft_bpe"),
-    new ExpressionInfo(classOf[BpeEncodeExpr].getName, "graft_bpe"),
-    bpeBuilder)
-
-  private[plans] val unigramBuilder =
-    (exprs: Seq[Expression]) => {
-      val ps = exprs(1).eval()
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val pieces = (0 until ps.numElements())
-        .map(i => ps.getUTF8String(i).toString)
-      val lps = exprs(2).eval()
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        .toDoubleArray().toSeq
-      UnigramSegmentExpr(exprs.head, pieces, lps): Expression
-    }
-
-  private def evalFloats(e: Expression): Seq[Float] = {
-    val arr = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    arr.toFloatArray().toSeq
-  }
-
-  private[plans] val pqEncodeBuilder =
-    (exprs: Seq[Expression]) => PqEncodeExpr(exprs.head, evalFloats(exprs(1)),
-      exprs(2).eval().asInstanceOf[Int],
-      exprs(3).eval().asInstanceOf[Int]): Expression
-
-  private[plans] val pqCosBuilder =
-    (exprs: Seq[Expression]) => PqCosineExpr(exprs.head, exprs(1),
-      evalFloats(exprs(2)),
-      exprs(3).eval().asInstanceOf[Int],
-      exprs(4).eval().asInstanceOf[Int]): Expression
-
-  private[plans] val pqTableBuilder =
-    (exprs: Seq[Expression]) => PqTableExpr(exprs.head, evalFloats(exprs(1)),
-      exprs(2).eval().asInstanceOf[Int],
-      exprs(3).eval().asInstanceOf[Int]): Expression
-
-  private[plans] val pqCosTableBuilder =
-    (exprs: Seq[Expression]) => PqCosineTableExpr(exprs.head, exprs(1),
-      evalFloats(exprs(2)),
-      exprs(3).eval().asInstanceOf[Int],
-      exprs(4).eval().asInstanceOf[Int]): Expression
-
-  private[plans] val pqTableDescriptor = (
-    FunctionIdentifier("graft_pq_table"),
-    new ExpressionInfo(classOf[PqTableExpr].getName, "graft_pq_table"),
-    pqTableBuilder)
-
-  private[plans] val pqCosTableDescriptor = (
-    FunctionIdentifier("graft_pq_cos_t"),
-    new ExpressionInfo(classOf[PqCosineTableExpr].getName, "graft_pq_cos_t"),
-    pqCosTableBuilder)
-
-  private[plans] val pqEncodeDescriptor = (
-    FunctionIdentifier("graft_pq_encode"),
-    new ExpressionInfo(classOf[PqEncodeExpr].getName, "graft_pq_encode"),
-    pqEncodeBuilder)
-
-  private[plans] val pqCosDescriptor = (
-    FunctionIdentifier("graft_pq_cos"),
-    new ExpressionInfo(classOf[PqCosineExpr].getName, "graft_pq_cos"),
-    pqCosBuilder)
-
-  private[plans] val deflateLenDescriptor = (
-    FunctionIdentifier("graft_deflate_len"),
-    new ExpressionInfo(classOf[DeflateLenExpr].getName, "graft_deflate_len"),
-    (exprs: Seq[Expression]) => DeflateLenExpr(exprs.head): Expression)
-
-  private[plans] val mediaMetaDescriptor = (
-    FunctionIdentifier("graft_media_meta"),
-    new ExpressionInfo(classOf[MediaMetaExpr].getName, "graft_media_meta"),
-    (exprs: Seq[Expression]) => MediaMetaExpr(exprs.head): Expression)
-
-  private[plans] val phraseHitsBuilder =
-    (exprs: Seq[Expression]) => {
-      val arr = exprs(1).eval()
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      val phrase = (0 until arr.numElements())
-        .map(i => arr.getUTF8String(i).toString)
-      PhraseHitsExpr(exprs.head, phrase): Expression
-    }
-
-  private[plans] val phraseHitsDescriptor = (
-    FunctionIdentifier("graft_phrase_hits"),
-    new ExpressionInfo(classOf[PhraseHitsExpr].getName, "graft_phrase_hits"),
-    phraseHitsBuilder)
-
-  private[plans] val spanCorruptDescriptor = (
-    FunctionIdentifier("graft_span_corrupt"),
-    new ExpressionInfo(classOf[SpanCorruptExpr].getName, "graft_span_corrupt"),
-    (exprs: Seq[Expression]) => SpanCorruptExpr(exprs.head, exprs(1)): Expression)
-
-  private[plans] val gopherRepDescriptor = (
-    FunctionIdentifier("graft_gopher_rep"),
-    new ExpressionInfo(classOf[GopherRepetition].getName, "graft_gopher_rep"),
-    (exprs: Seq[Expression]) => GopherRepetition(exprs.head, exprs(1)): Expression)
-
-  private[plans] val topGramDescriptor = (
-    FunctionIdentifier("graft_top_ngram_count"),
-    new ExpressionInfo(classOf[TopGramCount].getName, "graft_top_ngram_count"),
-    (exprs: Seq[Expression]) => TopGramCount(exprs.head, exprs(1)): Expression)
-
-  private[plans] val lumaResizeDescriptor = (
-    FunctionIdentifier("graft_luma_resize"),
-    new ExpressionInfo(classOf[LumaResizeExpr].getName, "graft_luma_resize"),
-    (exprs: Seq[Expression]) =>
-      LumaResizeExpr(exprs.head, exprs(1), exprs(2)): Expression)
-
-  private[plans] val f1CommonDescriptor = (
-    FunctionIdentifier("graft_f1_common"),
-    new ExpressionInfo(classOf[TokenOverlap].getName, "graft_f1_common"),
-    (exprs: Seq[Expression]) => TokenOverlap(exprs.head, exprs(1)): Expression)
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc",
-      exprs => NfcNormalizeExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_i8",
-      exprs => CosineFloatInt8(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lcs",
-      exprs => LcsLength(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_stem",
-      exprs => StemTokens(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_keys",
-      exprs => LshBandKeys(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int],
-        exprs(3).eval().asInstanceOf[Int]),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash",
-      exprs => SimhashExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      exprs => MinhashSigExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_bands",
-      exprs => MinhashBandsExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_all",
-      exprs => MinhashAllExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_normalize",
-      exprs => NormalizeTextExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_set",
-      exprs => ShingleSetExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bleu_counts",
-      exprs => BleuCountsExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bleu_smooth",
-      exprs => BleuSmoothExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", bloomAggBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", bloomContainsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe", bpeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_unigram", unigramBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode", pqEncodeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_cos", pqCosBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_table", pqTableBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_cos_t", pqCosTableBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deflate_len",
-      exprs => DeflateLenExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_f1_common",
-      exprs => TokenOverlap(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_media_meta",
-      exprs => MediaMetaExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_phrase_hits", phraseHitsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dhash",
-      exprs => DHashExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ahash",
-      exprs => AudioHashExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_span_corrupt",
-      exprs => SpanCorruptExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gopher_rep",
-      exprs => GopherRepetition(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_ngram_count",
-      exprs => TopGramCount(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_luma_resize",
-      exprs => LumaResizeExpr(exprs.head, exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_agg",
-      exprs => KllAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else KllQuantiles.DefaultK).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_merge",
-      exprs => KllMergeAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else KllQuantiles.DefaultK).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_quantile",
-      exprs => KllQuantileExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_rank",
-      exprs => KllRankExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_agg",
-      exprs => FreqAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else FreqItems.DefaultMapSize).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_merge",
-      exprs => FreqMergeAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else FreqItems.DefaultMapSize).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_topk",
-      exprs => FreqTopKExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_freq_maxerr",
-      exprs => FreqMaxErrExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash_embed",
-      exprs => HashEmbedExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_agg",
-      exprs => ThetaAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else ThetaSketch.DefaultLgK).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_merge",
-      exprs => ThetaMergeAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else ThetaSketch.DefaultLgK).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_est",
-      exprs => ThetaEstExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_inter_est",
-      exprs => ThetaInterEstExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_theta_union_est",
-      exprs => ThetaUnionEstExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_agg",
-      exprs => CmsAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else CountMin.DefaultWidth).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_merge",
-      exprs => CmsMergeAggExpr(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Int]
-        else CountMin.DefaultWidth).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_est",
-      exprs => CmsEstExpr(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_total",
-      exprs => CmsTotalExpr(exprs.head),
-      "built-in")
-  }
 }

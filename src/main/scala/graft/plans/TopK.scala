@@ -29,12 +29,7 @@ object TopK {
       SortOrder(attr(n), if (desc) Descending else Ascending)
     }
     val rankAttr = AttributeReference(rankName, LongType, nullable = false)()
-    val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
-    GraftSqlBridge.ofRows(spark,
+    GraftSqlBridge.ofRows(df.sparkSession,
       TopKPerKeyPlan(keys.map(attr), sortOrders, k, rankAttr, plan))
   }
 }

@@ -35,13 +35,15 @@ case class TopKPerKeyPlan(
     copy(child = newChild)
 }
 
-/** Filters on grouping keys commute with top-k — push them below so
-  * they can keep descending toward the scan.
+/** Deterministic filters on grouping keys commute with top-k — push
+  * them below so they can keep descending toward the scan. A
+  * nondeterministic filter (`rand() < 0.5` references no column at all)
+  * stays above: below the top-k it would pick different survivors.
   */
 object PushFilterThroughTopK extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, t: TopKPerKeyPlan)
-        if cond.references.subsetOf(AttributeSet(t.groupExprs.flatMap(_.references))) =>
+    case Filter(cond, t: TopKPerKeyPlan) if cond.deterministic &&
+        cond.references.subsetOf(AttributeSet(t.groupExprs.flatMap(_.references))) =>
       t.copy(child = Filter(cond, t.child))
   }
 }

@@ -82,7 +82,6 @@ object AnnIndex {
     */
   def upsertFrame(newVecs: DataFrame, path: String): DataFrame = {
     val spark = newVecs.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val cents = broadcast(readCentroids(spark, path))
     val (cb, m, kEff) = readPq(spark, path)
     val cells = newVecs.select(col("vec_id"), col("embedding"))

@@ -59,7 +59,6 @@ object CalibrationStore {
   def append(newModel: DataFrame, path: String): Unit = {
     val spark = newModel.sparkSession
     checkFormat(spark, path)
-    graft.plans.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     // BOUNDED collect: one (sketch, count) row per source — and it must
     // materialize BEFORE the overwrite below, or the write would clobber

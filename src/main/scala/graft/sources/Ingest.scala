@@ -66,21 +66,17 @@ object Ingest {
       clipCounts: Option[DataFrame])
 
   private def hashFrames(shard: DataFrame): HashFrames = {
-    val s = shard.sparkSession
     val imgAll = if (shard.columns.contains("payload")) {
-      graft.plans.GraftFunctions.register(s)
       Some(shard.select(col("doc_id"),
           expr("graft_dhash(payload)").as("phash"))
         .localCheckpoint())
     } else None
     val audioAll = if (shard.columns.contains("payload")) {
-      graft.plans.GraftFunctions.register(s)
       Some(shard.select(col("doc_id"),
           expr("graft_ahash(payload)").as("phash"))
         .localCheckpoint())
     } else None
     val clipSampled = if (shard.columns.contains("frames")) {
-      graft.plans.GraftFunctions.register(s)
       Some(graft.operators.Multimodal.sampleFrames(
           shard.select(col("doc_id"), col("frames")))
         .localCheckpoint())

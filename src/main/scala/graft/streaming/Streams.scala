@@ -309,7 +309,6 @@ object Streams {
     * ingest).
     */
   def tokSegmented(docs: DataFrame, table: Seq[(String, Double)]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("_toks", graft.functions.TextFns.tokens(col("text")))
       .withColumn("_pieces",
@@ -460,7 +459,6 @@ object Streams {
     * and scores for a given pair equal the batch operator's exactly.
     */
   def scoreGated(pairs: DataFrame, minF1: Double): DataFrame = {
-    graft.plans.GraftFunctions.register(pairs.sparkSession)
     val prec = col("n_common") / col("n_pred")
     val rec = col("n_common") / col("n_gold")
     pairs
@@ -663,7 +661,6 @@ object Streams {
     require(index.nonEmpty && index.size <= AnnIndexCap,
       s"serving index must hold 1..$AnnIndexCap codes, got ${index.size}")
     val ss = queries.sparkSession
-    graft.plans.GraftFunctions.register(ss)
     val dim = index.head._2.length
     require(index.forall(_._2.length == dim), "ragged index codes")
     val ids = new Array[Long](index.size)
@@ -886,7 +883,6 @@ object Streams {
     * twin whose register-max state is bit-identical to batch).
     */
   def quantileProfiled(events: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(events.sparkSession)
     events
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
@@ -913,7 +909,6 @@ object Streams {
     * bit-stability — is the spec'd contract (the KLL convention).
     */
   def vocabProfiled(docs: DataFrame, topV: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     import graft.functions.TextFns
     docs
       .select(col("lang"),
@@ -951,7 +946,6 @@ object Streams {
     * with vocab_cms as the full-corpus audit.
     */
   def cmsProfiled(docs: DataFrame, probes: Seq[String]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     import graft.functions.TextFns
     val probeCol = array(probes.map(lit): _*)
     docs
@@ -993,7 +987,6 @@ object Streams {
     */
   def noveltyProfiled(docs: DataFrame,
       baseline: Seq[(String, Array[Byte])]): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     import graft.functions.TextFns
     // empty-baseline guard: map() with zero args types as
     // map<string,string>, which would feed a STRING into
@@ -1287,7 +1280,6 @@ object Streams {
   def ingestPhashGate(docs: DataFrame, bandStore: DataFrame):
       Dataset[PhashGateOut] = {
     import docs.sparkSession.implicits._
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val hashed = docs
       .withColumn("phash", expr("graft_dhash(payload)"))
       .filter(col("phash").isNotNull)
@@ -1336,7 +1328,6 @@ object Streams {
   def ingestAudioGate(docs: DataFrame, bandStore: DataFrame):
       Dataset[AudioGateOut] = {
     import docs.sparkSession.implicits._
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val hashed = docs
       .withColumn("phash", expr("graft_ahash(payload)"))
       .filter(col("phash").isNotNull)
@@ -1446,7 +1437,6 @@ object Streams {
   def bitextGate(src: DataFrame, bands: DataFrame, vecs: DataFrame,
       stats: DataFrame, bits: Int): Dataset[BitextOut] = {
     import src.sparkSession.implicits._
-    graft.plans.GraftFunctions.register(src.sparkSession)
     val S = graft.operators.Similarity
     val sb = src
       .withColumn("keys", expr(

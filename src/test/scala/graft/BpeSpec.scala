@@ -28,7 +28,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("graft_bpe kernel: greedy lowest-rank encoding matches hand-traced pieces") {
-    graft.plans.GraftFunctions.register(spark)
     val merges = Bpe.trainMerges(wordCounts, 5)
     val df = Seq(
       (1L, "lowest"), (2L, "lower"), (3L, "low"), (4L, "xyz"), (5L, ""),

@@ -15,7 +15,6 @@ class CmsSpec extends SparkSpec {
   private val eps = 2.0 / width
 
   test("cms: estimates never undercount; overcount within the published bound; small domains exact") {
-    graft.plans.GraftFunctions.register(spark)
     // planted counts: token t_i appears i times, 1 ≤ i ≤ 60
     val rows = (1 to 60).flatMap(i => Seq.fill(i)(s"t$i"))
     val sk = rows.toDF("token")
@@ -42,7 +41,6 @@ class CmsSpec extends SparkSpec {
   }
 
   test("cms: partitioned aggregation is byte-identical to one partition; rollup merge likewise") {
-    graft.plans.GraftFunctions.register(spark)
     val rows = (1 to 500).map(i => (i % 7, s"tok${i % 40}"))
     def bytes(parts: Int) = rows.toDF("shard", "token")
       .repartition(parts)

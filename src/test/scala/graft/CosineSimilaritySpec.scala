@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.GraftFunctions
 import org.apache.spark.sql.functions._
 
 class CosineSimilaritySpec extends SparkSpec {
@@ -13,7 +12,6 @@ class CosineSimilaritySpec extends SparkSpec {
   ).toDF("id", "a", "b")
 
   test("native cosine matches closed-form values") {
-    GraftFunctions.register(spark)
     val out = df.select($"id", expr("graft_cosine(a, b)").as("cos"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(out(1L) - 1.0) < 1e-12)
@@ -22,7 +20,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("native cosine is bit-identical to the HOF composition") {
-    GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings").limit(100)
     val a = e.select($"vec_id", $"embedding".as("q_emb"))
     val b = e.select(($"vec_id" + 1).as("vec_id"), $"embedding".as("c_emb"))
@@ -36,7 +33,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null inputs yield null, and codegen path is exercised") {
-    GraftFunctions.register(spark)
     val withNull = Seq((Some(Array(1.0f)), None: Option[Array[Float]]))
       .toDF("a", "b")
       .select(expr("graft_cosine(a, b)").as("cos"))
@@ -51,7 +47,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("pq kernels: hand codebook encode + ADC cosine, ties and guards") {
-    GraftFunctions.register(spark)
     // m=2 subspaces × k=2 centroids × dsub=2, subspace-major flat:
     //   j0: c0=(1,0)  c1=(0,1)      j1: c0=(1,1)  c1=(0,2)
     val cb = Array(1.0f, 0.0f, 0.0f, 1.0f, 1.0f, 1.0f, 0.0f, 2.0f)
@@ -87,7 +82,6 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("embed_hash: unit-norm signed hashing, Scala mirror exact, copies identical") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     val docs = Seq(
       (1L, "join hash row batch scan column"),
@@ -128,7 +122,6 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("embed_hash: hashed text vectors drive semanticDedup end-to-end") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftFunctions.register(spark)
     // planted exact-copy pair inside the real corpus text space: the
     // bridge must let the embedding ladder find it with NO embeddings
     // table in sight

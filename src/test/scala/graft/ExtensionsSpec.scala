@@ -1,70 +1,65 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.{GraftFunctions, TopKStrategy}
 
-/** The production wiring path: a session created with
-  * `spark.sql.extensions=graft.plans.GraftExtensions` must resolve
-  * every graft kernel WITHOUT any runtime `register()` call.
+/** The production wiring: the factory session loads
+  * `graft.plans.GraftExtensions`, which installs every kernel of the
+  * one registry plus the top-k strategy — no runtime registration.
   */
 class ExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions injects every kernel function") {
-    val base = spark // force shared-session init first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    try {
-      val r = s2.sql(
-        "SELECT graft_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c, " +
-          "graft_cosine_i8(array(1.0F, 2.0F), array(10, 20)) AS c8, " +
-          "graft_lcs(array('a', 'b'), array('a', 'c')) AS l, " +
-          "graft_stem(array('running')) AS st, " +
-          "graft_simhash(array('x', 'y')) AS sh, " +
-          "graft_minhash_sig(array('x', 'y', 'z', 'w')) AS mh, " +
-          "graft_lsh_keys(array_repeat(CAST(1.0 AS FLOAT), 64), 4, 24, 5) AS lk, " +
-          "graft_bleu_smooth(array(2L, 1L, 0L, 0L, 0L, 3L, 3L)) AS bs, " +
-          "graft_deflate_len(CAST('aaaaaaaaaaaaaaaa' AS BINARY)) AS dl, " +
-          "graft_f1_common(array('a', 'b', 'a'), array('a', 'a', 'c')) AS f1c, " +
-          "graft_bpe(array('lowest'), array('e s', 'es t</w>', 'l o', 'lo w')) AS bp, " +
-          "graft_pq_encode(array(1.0F, 2.0F), array(1.0F, 2.0F), 2, 1) AS pqe, " +
-          "graft_pq_cos(array(1.0F, 2.0F), " +
-          "  graft_pq_encode(array(1.0F, 2.0F), array(1.0F, 2.0F), 2, 1), " +
-          "  array(1.0F, 2.0F), 2, 1) AS pqc, " +
-          "graft_media_meta(CAST('nope' AS BINARY)) AS mm, " +
-          "graft_phrase_hits(array('a', 'b', 'a', 'b'), array('a', 'b')) AS ph, " +
-          "graft_span_corrupt(array('a'), 0L) AS sc")
-        .head()
-      assert(math.abs(r.getAs[Double]("c") - 1.0) < 1e-12)
-      assert(math.abs(r.getAs[Double]("c8") - 1.0) < 1e-12)
-      assert(r.getAs[Long]("l") == 1L)
-      assert(r.getAs[collection.Seq[String]]("st").toSeq == Seq("run"))
-      assert(r.getAs[collection.Seq[Long]]("mh").length == 32)
-      assert(r.getAs[collection.Seq[Long]]("lk").length == 4)
-      val bs = r.getAs[Double]("bs")
-      assert(bs > 0.0 && bs <= 1.0, s"bleu $bs out of range")
-      val dl = r.getAs[Long]("dl")
-      assert(dl > 0L && dl < 16L, s"deflate of 16 repeated bytes: $dl")
-      assert(r.getAs[Long]("f1c") == 2L) // multiset: min(2,2 a's) + 0
+    val registry = spark.sessionState.functionRegistry
+    val missing = GraftFunctions.all.map(_._1).filterNot(registry.functionExists)
+    assert(missing.isEmpty, s"kernels not installed: $missing")
+  }
 
-      assert(r.getAs[collection.Seq[String]]("bp").toSeq ==
-        Seq("low", "est</w>"))
-      assert(r.getAs[collection.Seq[Int]]("pqe").toSeq == Seq(0, 0))
-      assert(math.abs(r.getAs[Double]("pqc") - 1.0) < 1e-12)
-      assert(r.getAs[collection.Seq[Long]]("mm").toSeq ==
-        Seq(0L, 0L, 0L, 0L, 0L, 0L))
-      assert(r.getAs[collection.Seq[Int]]("ph").toSeq == Seq(0, 2))
-      val sc = r.getAs[collection.Seq[collection.Seq[String]]]("sc")
-      assert(sc(0).toSeq == Seq("a") && sc(1).isEmpty)
-    } finally {
-      // the shared SparkContext stays up; restore the suite session
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+  test("the spec session carries the factory's config and strategies") {
+    assert(spark.conf.get("spark.sql.codegen.maxFields") == "300")
+    assert(spark.sessionState.planner.strategies.contains(TopKStrategy))
+  }
+
+  test("injected kernels compute the expected values") {
+    val r = spark.sql(
+      "SELECT graft_cosine(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c, " +
+        "graft_cosine_i8(array(1.0F, 2.0F), array(10, 20)) AS c8, " +
+        "graft_lcs(array('a', 'b'), array('a', 'c')) AS l, " +
+        "graft_stem(array('running')) AS st, " +
+        "graft_simhash(array('x', 'y')) AS sh, " +
+        "graft_minhash_sig(array('x', 'y', 'z', 'w')) AS mh, " +
+        "graft_lsh_keys(array_repeat(CAST(1.0 AS FLOAT), 64), 4, 24, 5) AS lk, " +
+        "graft_bleu_smooth(array(2L, 1L, 0L, 0L, 0L, 3L, 3L)) AS bs, " +
+        "graft_deflate_len(CAST('aaaaaaaaaaaaaaaa' AS BINARY)) AS dl, " +
+        "graft_f1_common(array('a', 'b', 'a'), array('a', 'a', 'c')) AS f1c, " +
+        "graft_bpe(array('lowest'), array('e s', 'es t</w>', 'l o', 'lo w')) AS bp, " +
+        "graft_pq_encode(array(1.0F, 2.0F), array(1.0F, 2.0F), 2, 1) AS pqe, " +
+        "graft_pq_cos(array(1.0F, 2.0F), " +
+        "  graft_pq_encode(array(1.0F, 2.0F), array(1.0F, 2.0F), 2, 1), " +
+        "  array(1.0F, 2.0F), 2, 1) AS pqc, " +
+        "graft_media_meta(CAST('nope' AS BINARY)) AS mm, " +
+        "graft_phrase_hits(array('a', 'b', 'a', 'b'), array('a', 'b')) AS ph, " +
+        "graft_span_corrupt(array('a'), 0L) AS sc")
+      .head()
+    assert(math.abs(r.getAs[Double]("c") - 1.0) < 1e-12)
+    assert(math.abs(r.getAs[Double]("c8") - 1.0) < 1e-12)
+    assert(r.getAs[Long]("l") == 1L)
+    assert(r.getAs[collection.Seq[String]]("st").toSeq == Seq("run"))
+    assert(r.getAs[collection.Seq[Long]]("mh").length == 32)
+    assert(r.getAs[collection.Seq[Long]]("lk").length == 4)
+    val bs = r.getAs[Double]("bs")
+    assert(bs > 0.0 && bs <= 1.0, s"bleu $bs out of range")
+    val dl = r.getAs[Long]("dl")
+    assert(dl > 0L && dl < 16L, s"deflate of 16 repeated bytes: $dl")
+    assert(r.getAs[Long]("f1c") == 2L) // multiset: min(2,2 a's) + 0
+
+    assert(r.getAs[collection.Seq[String]]("bp").toSeq ==
+      Seq("low", "est</w>"))
+    assert(r.getAs[collection.Seq[Int]]("pqe").toSeq == Seq(0, 0))
+    assert(math.abs(r.getAs[Double]("pqc") - 1.0) < 1e-12)
+    assert(r.getAs[collection.Seq[Long]]("mm").toSeq ==
+      Seq(0L, 0L, 0L, 0L, 0L, 0L))
+    assert(r.getAs[collection.Seq[Int]]("ph").toSeq == Seq(0, 2))
+    val sc = r.getAs[collection.Seq[collection.Seq[String]]]("sc")
+    assert(sc(0).toSeq == Seq("a") && sc(1).isEmpty)
   }
 }

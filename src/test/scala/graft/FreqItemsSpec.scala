@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class FreqItemsSpec extends SparkSpec {
 
   test("graft_freq_agg: below purge capacity every estimate is exact") {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     // 40 distinct tokens with planted counts 1..40 — far below
     // 0.75 * 64, so no purge can ever fire
@@ -37,7 +36,6 @@ class FreqItemsSpec extends SparkSpec {
   }
 
   test("graft_freq_agg: planted heavies survive an over-capacity stream within bounds") {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     // 5 heavy tokens (600 each) in a sea of 20k singletons — distinct
     // count 312x the map size, so purges fire constantly
@@ -67,7 +65,6 @@ class FreqItemsSpec extends SparkSpec {
   }
 
   test("graft_freq_merge: shard rollup honors the same bounds as single-pass") {
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     val heavies = (1 to 5).flatMap(i => Seq.fill(400)(s"heavy$i"))
     val noise = (1 to 8000).map(i => s"u$i")

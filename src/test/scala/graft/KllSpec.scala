@@ -16,7 +16,6 @@ class KllSpec extends SparkSpec {
     cents.count(_ <= v).toDouble / cents.length
 
   test("score_stats_sketch: p50/p95 land within rank tolerance of exact") {
-    graft.plans.GraftFunctions.register(spark)
     val out = operators.MapReduceDocs.ops.find(_.name == "score_stats_sketch").get
       .query(spark, sfDir).collect()
     assert(out.nonEmpty)
@@ -39,7 +38,6 @@ class KllSpec extends SparkSpec {
   }
 
   test("graft_kll_merge: sharded build merges to the single-pass answer") {
-    graft.plans.GraftFunctions.register(spark)
     val e = Tables.events(spark, sfDir)
       .select(col("event_type"),
         expr("CAST(CAST(ROUND(value * 100) AS BIGINT) AS DOUBLE)").as("c"),
@@ -73,7 +71,6 @@ class KllSpec extends SparkSpec {
   }
 
   test("quantile_bins_sketch: cutoffs within rank tolerance; bins near-balanced") {
-    graft.plans.GraftFunctions.register(spark)
     val out = operators.Sampling.quantileBinsSketch(
       Tables(spark, sfDir, "documents")).collect()
     val n = out.length
@@ -105,7 +102,6 @@ class KllSpec extends SparkSpec {
   }
 
   test("score_stats_sketch plan: one scan, no O(rows) shuffle after it") {
-    graft.plans.GraftFunctions.register(spark)
     val plan = operators.MapReduceDocs.ops.find(_.name == "score_stats_sketch").get
       .query(spark, sfDir).queryExecution.executedPlan.toString
     // the aggregate carries constant-size sketch buffers: exactly the

@@ -174,7 +174,6 @@ class MapReduceDocsSpec extends SparkSpec {
   }
 
   test("score_rougeL stems before the LCS (stemmed fixture matches)") {
-    graft.plans.GraftFunctions.register(spark)
     // "cats agreed" vs "cat agree": raw LCS = 0, stemmed LCS = 2
     val df = Seq((1L, Seq("the", "cats", "agreed"), Seq("the", "cat", "agree")))
       .toDF("id", "p", "g")
@@ -232,7 +231,6 @@ class MapReduceDocsSpec extends SparkSpec {
   }
 
   test("score_rouge1: hand-computed stemmed-unigram f-measure; narrow plan") {
-    graft.plans.GraftFunctions.register(spark)
     // stems: running→run, cats→cat; multiset overlap of
     // p = [run, cat, sat] and g = [run, run, cat]: min-counts
     // run 1, cat 1 → common 2; F = 2·2/(3+3) = 0.666667
@@ -263,7 +261,6 @@ class MapReduceDocsSpec extends SparkSpec {
   }
 
   test("score_rouge2: hand-computed stemmed-bigram overlap; counts align with rouge1") {
-    graft.plans.GraftFunctions.register(spark)
     // stems: running→run, cats→cat. p bigrams = [run cat, cat sat];
     // g bigrams = [run cat, cat mat] → multiset common 1
     def bi(c: String) =
@@ -295,7 +292,6 @@ class MapReduceDocsSpec extends SparkSpec {
   }
 
   test("graft_lcs: hand-computed LCS values and ROUGE-L formula") {
-    graft.plans.GraftFunctions.register(spark)
     val df = Seq(
       (1L, Seq("a", "b", "c", "d"), Seq("a", "x", "c", "y", "d")), // lcs acd=3
       (2L, Seq("a", "b"), Seq("c", "d")),                          // lcs 0

@@ -58,7 +58,6 @@ class OverlapSpec extends SparkSpec {
   }
 
   test("theta sketches merge associatively: shard rollup equals one-shot build") {
-    graft.plans.GraftFunctions.register(spark)
     val d = Tables(spark, sfDir, "documents")
     // one-shot per-source sketches vs sketches built per (source, half)
     // then rolled up with graft_theta_merge — the shard→fleet contract

@@ -203,7 +203,6 @@ class PipelineOpsSpec extends SparkSpec {
     // BIT-IDENTICAL to the original column formulation — persisted
     // band stores and every probe path depend on the band space not
     // moving. Random docs incl. sub-shingle-length and empty edges.
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val vocab = "a b c d e f g h i j k l m n o p".split(" ")
     val docs = ((1 to 200).map { i =>
@@ -731,7 +730,6 @@ class PipelineOpsSpec extends SparkSpec {
   test("ann_quantized: int8 serving recall >= 0.9 vs the float path") {
     // scale cancellation: cos(q, s·c) = cos(q, c) — the kernel sees raw
     // codes. Hand-check on a known pair first.
-    graft.plans.GraftFunctions.register(spark)
     val kernel = Seq((Array(1.0f, 2.0f, 2.0f), Array(10, 20, 20)))
       .toDF("q", "c").selectExpr("graft_cosine_i8(q, c) AS cos")
       .head().getDouble(0)
@@ -801,7 +799,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("ann_filtered: predicate prunes BELOW the heap; recall vs exact filtered brute-force") {
-    graft.plans.GraftFunctions.register(spark)
     val out = run("ann_filtered")
     // 1) every served result satisfies the metadata predicate — the
     // contract post-filtering cannot give without returning < k rows
@@ -848,7 +845,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("dedup_embed kernel: planted near-identical vectors are detected") {
-    graft.plans.GraftFunctions.register(spark)
     val v = Array.tabulate(64)(i => (i + 1).toFloat)
     val vNear = v.clone(); vNear(0) = v(0) * 1.01f // same direction, ~1.0 cos
     val vFar = Array.tabulate(64)(i => if (i % 2 == 0) 1.0f else -1.0f)
@@ -867,7 +863,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("dedup_embed LSH: pair volume scales linearly, not quadratically") {
-    graft.plans.GraftFunctions.register(spark)
     // all vectors share ONE label (the old per-label scheme would
     // compare every pair: 4x the pairs when n doubles). Band width
     // grows with n (embBits), so bucket population — and pairs per
@@ -974,7 +969,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("mm_meta kernel: hand-computed PNG/JPEG/WAV headers parse exactly") {
-    graft.plans.GraftFunctions.register(spark)
     // hand-written PNG: signature + IHDR(len 13) with width 300
     // (0x0000012C), height 7, depth 8, color type 6 (RGBA → 4 channels)
     val png = Array[Int](
@@ -1243,7 +1237,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("text_compress: repetition compresses harder than diverse text") {
-    graft.plans.GraftFunctions.register(spark)
     val fixture = Seq(
       (1L, "spam " * 200),                                 // templated
       (2L, (1 to 200).map(i => s"w$i").mkString(" ")),     // diverse
@@ -1489,7 +1482,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("curate_e2e: planted fixture drops exactly one doc set per stage") {
-    graft.plans.GraftFunctions.register(spark)
     // 19 distinct filler words + one shared stopword; every token
     // carries a letters-only per-doc tag so cross-doc shingle overlap
     // is zero (no accidental near-dup candidates, no digit-gate hits)
@@ -1587,7 +1579,6 @@ class PipelineOpsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
-    graft.plans.GraftFunctions.register(spark)
     // every job the chain runs (checkpoint materializations included)
     // flows through the listener; count text-carrying shuffles across
     // ALL of them — the chain's contract is at most one
@@ -1676,7 +1667,6 @@ class PipelineOpsSpec extends SparkSpec {
   test("dedup_pipeline: corpus text crosses at most one exchange") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    graft.plans.GraftFunctions.register(spark)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.execution.SparkPlan]()
     val listener = new QueryExecutionListener {
@@ -2385,7 +2375,6 @@ class PipelineOpsSpec extends SparkSpec {
   test("sample_stratified: exactly k per stratum, hash-ordered, heap plan") {
     // small stratum keeps everything; big stratum keeps exactly StratK,
     // and the kept set is the k smallest by the portable Lehmer hash
-    graft.plans.GraftFunctions.register(spark)
     val m = graft.operators.Sampling.MixMod
     val mul = graft.operators.Sampling.MixMul
     val k = graft.operators.Sampling.StratK
@@ -2521,7 +2510,6 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("mine_hardneg: corpus-growing mining frames ride the counted broadcast guard") {
     import operators.Search
-    graft.plans.GraftFunctions.register(spark)
     // queries are the %97 slice (docs 0, 97, 194); the rest are pool
     // docs sharing their terms, so every query mines real negatives
     val docs = Seq(
@@ -3021,7 +3009,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("span_corrupt: hand-traced Lehmer spans; lossless reconstruction corpus-wide") {
-    graft.plans.GraftFunctions.register(spark)
     // for small (seed, i) the big-mod is identity, so span starts
     // satisfy 11·(seed+i+1) ≡ 0 (mod 20) ⇔ i ≡ 19 − seed (mod 20):
     // seed 0 over 25 tokens → one span at 19..21; seed 1 over 4
@@ -3163,7 +3150,6 @@ class PipelineOpsSpec extends SparkSpec {
         assert(h >= 0L && h < graft.plans.SpanCorrupt.Mod, s"$seed/$pos → $h")
       }
     }
-    graft.plans.GraftFunctions.register(spark)
     val ct = fixture.selectExpr(
       "split(text, ' ') AS toks",
       "graft_span_corrupt(split(text, ' '), doc_id) AS ct").collect()
@@ -3394,7 +3380,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("hybrid_rrf: hand-computed fusion; pools bounded; windows above limits") {
-    graft.plans.GraftFunctions.register(spark)
     // text side = the search_bm25 fixture: scores d4=2314 (rank 1),
     // d1=1375 (2), d3=880 (3); vector side vs query vec 7 = [1,0,0,0]:
     // v1 cos 1 (rank 1), v4 cos .707107 (2), v2 cos 0 (3), v3 cos -1
@@ -3451,7 +3436,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("mm_resize: thumbnail == brute-force block means; edits cell-local; non-PNG refuses") {
-    graft.plans.GraftFunctions.register(spark)
     val (w, h) = (32, 24)
     val tw = Multimodal.ThumbW
     val th = Multimodal.ThumbH
@@ -3504,7 +3488,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("mm_frames: stride sampling before decode; hashes == direct kernel on planted frames") {
-    graft.plans.GraftFunctions.register(spark)
     val out = run("mm_frames")
     // decode AFTER sample: the dhash ProjectExec must have the
     // frame_idx FilterExec as a DESCENDANT (structural walk — string
@@ -3557,7 +3540,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("mm_phash: dHash invariants — identical 0, one-pixel edit near, unrelated far") {
-    graft.plans.GraftFunctions.register(spark)
     def lum(seed: Long)(x: Int, y: Int) = Multimodal.plantedLuma(seed, x, y)
     val base = Multimodal.buildPng(32, 24, lum(42L))
     val same = Multimodal.buildPng(32, 24, lum(42L))
@@ -3620,7 +3602,6 @@ class PipelineOpsSpec extends SparkSpec {
     // (Sub/Up/Paeth), so decoding its output exercises the defilter
     // branches our zero-filter builder never produces; the expected
     // hash recomputes from the DECODED pixel grid independently
-    graft.plans.GraftFunctions.register(spark)
     val (w, hgt) = (40, 30)
     val img = new java.awt.image.BufferedImage(
       w, hgt, java.awt.image.BufferedImage.TYPE_INT_RGB)

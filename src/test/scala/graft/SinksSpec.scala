@@ -56,7 +56,6 @@ class SinksSpec extends SparkSpec {
   }
 
   test("sink_ann_index: bundle round-trips; serving from reload == fresh build") {
-    graft.plans.GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
     val out = Files.createTempDirectory("graft-annidx").resolve("idx").toString
     sources.AnnIndex.write(e, out, nShards = 3)
@@ -113,7 +112,6 @@ class SinksSpec extends SparkSpec {
   }
 
   test("ann_upsert: delta-only encode with the persisted model; union serve == full rebuild") {
-    graft.plans.GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
     val base = Files.createTempDirectory("graft-upsert")
     val idx = base.resolve("idx").toString
@@ -395,7 +393,6 @@ class SinksSpec extends SparkSpec {
 
   test("ingest_e2e: image payloads gate via phash_bands; accepted bands are remembered") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     def png(seed: Long) = operators.Multimodal.buildPng(32, 24,
       operators.Multimodal.plantedLuma(seed, _, _))
     val base = Files.createTempDirectory("graft-ingest-mm")
@@ -441,7 +438,6 @@ class SinksSpec extends SparkSpec {
 
   test("ingest_e2e: audio payloads gate via ahash_bands; re-gained copies flag (r13)") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     // planted audio with a deterministic multi-window envelope
     def wav(seed: Long, gain: Int = 1) = {
       val n = 65 * 3
@@ -495,7 +491,6 @@ class SinksSpec extends SparkSpec {
 
   test("ingest_e2e: clip shards gate via sampled-frame bands; accepted clips are remembered") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     def frame(seed: Long) = operators.Multimodal.buildPng(32, 24,
       operators.Multimodal.plantedLuma(seed, _, _))
     // a clip = ClipFrames seeded frames; sampled indices are 0 and 3
@@ -559,7 +554,6 @@ class SinksSpec extends SparkSpec {
     // next tick must flag reuse: the tier self-bootstraps instead of
     // crashing at the missing directory
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     def frame(seed: Long) = operators.Multimodal.buildPng(32, 24,
       operators.Multimodal.plantedLuma(seed, _, _))
     def clip(seedBase: Long): Seq[Array[Byte]] =
@@ -691,7 +685,6 @@ class SinksSpec extends SparkSpec {
     assert(sources.Fingerprints.readBands(spark, fp).count() > 0)
 
     // ann index
-    graft.plans.GraftFunctions.register(spark)
     val ann = base.resolve("ann").toString
     sources.AnnIndex.write(embs, ann, nShards = 1)
     assert(marker(ann) == sources.AnnIndex.FormatVersion.toString)
@@ -931,7 +924,6 @@ class SinksSpec extends SparkSpec {
     // probes every later snapshot against it. Same kernels on both
     // paths, so equality is row-for-row, not approximate.
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val d = Tables(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val e = Tables(spark, sfDir, "embeddings")

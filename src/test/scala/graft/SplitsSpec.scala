@@ -52,7 +52,6 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("split_leakage: near-dup pair shares a cluster, hence a split; sizes fold") {
-    graft.plans.GraftFunctions.register(spark)
     // base doc + lightly edited copy (near-dup: shares almost every
     // 3-shingle) + an unrelated doc; filler docs so LSH banding has a
     // corpus to bucket
@@ -77,7 +76,6 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("split_leakage driver query: every cluster single-split at corpus scale") {
-    graft.plans.GraftFunctions.register(spark)
     val out = SparkEntry.queries("split_leakage")(spark, sfDir).collect()
     assert(out.nonEmpty)
     out.groupBy(_.getAs[Long]("cluster_id")).foreach { case (c, rs) =>
@@ -117,7 +115,6 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("contam_minhash: edited benchmark copy flags fuzzy; unrelated doc stays clean") {
-    graft.plans.GraftFunctions.register(spark)
     def words(tag: String, n: Int) = (1 to n).map(i => s"$tag$i").mkString(" ")
     val bench = "which river is the longest river on the continent of " +
       "africa and through how many countries does it flow today"
@@ -140,7 +137,6 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("contam_minhash driver query: pool-only rows, band counts in range") {
-    graft.plans.GraftFunctions.register(spark)
     val out = SparkEntry.queries("contam_minhash")(spark, sfDir).collect()
     assert(out.nonEmpty)
     assert(out.forall(_.getAs[Long]("doc_id") % 97 != 0))

@@ -395,7 +395,6 @@ class StreamingSpec extends SparkSpec {
       (r.getAs[Long]("n_words"), r.getAs[Long]("n_pieces"),
         r.getAs[String]("piece_digest"))
     val streamed = spark.table("tok_out").collect().map(key).toMap
-    graft.plans.GraftFunctions.register(spark)
     val batch = docs.toDF("doc_id", "text")
       .withColumn("_toks", split(col("text"), " "))
       .withColumn("_pieces",
@@ -707,7 +706,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_file_source: landed shards gate exactly-once across a restart") {
     import org.apache.spark.sql.functions.col
-    graft.plans.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft-fsrc")
     val landing = base.resolve("landing"); val ckpt = base.resolve("ckpt")
     java.nio.file.Files.createDirectories(landing)
@@ -2015,7 +2013,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_ingest_phash: perceptual band-store probe equals batch; copies flag on arrival") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     def png(seed: Long) = operators.Multimodal.buildPng(32, 24,
       operators.Multimodal.plantedLuma(seed, _, _))
     // standing corpus: 40 images, pixels decoded ONCE into the store
@@ -2067,7 +2064,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_ingest_audio: envelope band-store probe equals batch; re-gained copies flag (r13)") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     def wav(seed: Long, gain: Int = 1) = {
       val n = 65 * 3
       val data = new Array[Byte](n * 2)
@@ -2128,7 +2124,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_ingest_clip: sampled-frame band probe equals batch; sampled-frame reuse flags on arrival") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     def frame(seed: Long) = operators.Multimodal.buildPng(32, 24,
       operators.Multimodal.plantedLuma(seed, _, _))
     def clip(seedBase: Long): Seq[Array[Byte]] =
@@ -2186,7 +2181,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_upsert: streamed deltas yield byte-identical servable codes to one batch upsert") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
     val base = java.nio.file.Files.createTempDirectory("graft-stream-upsert")
     val idxStream = base.resolve("idx_stream").toString
@@ -2457,7 +2451,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_ann: served top-k equals the batch ann_quantized exactly") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val e = graft.Tables(spark, sfDir, "embeddings")
     // the serving index: the SAME int8 codes the batch path stores
     val index = operators.Similarity.int8Codes(e).collect()
@@ -2506,7 +2499,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_ann: two served indices coexist without cross-binding; handle releases") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     // two DISJOINT indices around orthogonal axes: a query on axis 0
     // answered from indexB (axis-1 ids) proves cross-contamination
     val codeA = Seq((100L, Seq(127, 0, 0, 0)), (101L, Seq(90, 90, 0, 0)))
@@ -2540,7 +2532,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_quantile: KLL state buffer — rank bound holds across batch splits") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val rows = Tables.events(spark, sfDir)
       .select(col("event_type"), col("value"))
       .collect().map(r => (r.getString(0), r.getDouble(1)))
@@ -2582,7 +2573,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_vocab: Misra-Gries state — intervals contain exact counts across batch splits") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val rows = Tables(spark, sfDir, "documents")
       .select(col("lang"), col("text"))
       .collect().map(r => (r.getString(0), r.getString(1)))
@@ -2957,7 +2947,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_quantile restart: recovered KLL state keeps pre-restart rows counted") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft-ql-restart")
     val ckpt = base.resolve("ckpt").toString
     val rows = Tables.events(spark, sfDir)
@@ -3003,7 +2992,6 @@ class StreamingSpec extends SparkSpec {
 
   test("stream_novelty: streamed estimates == batch one-shot exactly; absent baseline source reads all-novel") {
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val corpus = Tables(spark, sfDir, "documents")
     // frozen baseline: the standing corpus's first half (ids split at
     // the midpoint — parity would correlate with the fixture's source
@@ -3064,7 +3052,6 @@ class StreamingSpec extends SparkSpec {
     // post-restart estimates must EQUAL the batch one-shot, not just
     // sit in a band.
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-nv-restart")
       .resolve("ckpt").toString
     val corpus = Tables(spark, sfDir, "documents")
@@ -3105,7 +3092,6 @@ class StreamingSpec extends SparkSpec {
     // order, no random draws — so unlike the MG/KLL twins the streamed
     // estimates must EQUAL the one-shot batch read, not just bound it.
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val rows = Tables(spark, sfDir, "documents")
       .select(col("lang"), col("text"))
       .collect().map(r => (r.getString(0), r.getString(1)))
@@ -3154,7 +3140,6 @@ class StreamingSpec extends SparkSpec {
     // post-restart read must EQUAL the batch one-shot, not merely
     // bound it.
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-cms-restart")
       .resolve("ckpt").toString
     val rows = Tables(spark, sfDir, "documents")
@@ -3194,7 +3179,6 @@ class StreamingSpec extends SparkSpec {
     // counts if the buffer class survives serialize → state store →
     // deserialize intact.
     implicit val sql = spark.sqlContext
-    graft.plans.GraftFunctions.register(spark)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-vc-restart")
       .resolve("ckpt").toString
     val rows = Tables(spark, sfDir, "documents")

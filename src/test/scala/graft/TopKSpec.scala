@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.TopK
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,19 +47,22 @@ class TopKSpec extends SparkSpec {
   }
 
   test("PushFilterThroughTopK pushes key filters below the operator") {
-    graft.plans.GraftFunctions.register(spark)
-    val orders = Tables(spark, sfDir, "orders")
-    val df = TopK.perKey(orders, Seq("o_custkey"),
+    // the factory session runs the rule in its optimizer
+    val topk = TopK.perKey(Tables(spark, sfDir, "orders"), Seq("o_custkey"),
       Seq("o_totalprice" -> TopK.Desc, "o_orderkey" -> TopK.Asc), 3)
-      .filter($"o_custkey" < 50)
-    // rule registered via extensions in prod; apply directly here
-    val before = graft.plans.PushFilterThroughTopK(
-      org.apache.spark.sql.GraftSqlBridge.analyzed(df))
-    val s = before.toString
-    val filterIdx = s.indexOf("Filter")
-    val topkIdx = s.indexOf("TopKPerKeyPlan")
-    assert(filterIdx > topkIdx,
-      s"filter should appear below (after) the topk node:\n$s")
+    def filterBelowTopK(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collectFirst {
+        case t: graft.plans.TopKPerKeyPlan =>
+          t.child.exists(_.isInstanceOf[Filter])
+      }.get
+    val keyed = topk.filter($"o_custkey" < 50)
+    assert(filterBelowTopK(keyed), keyed.queryExecution.optimizedPlan)
+    // nondeterministic: below the top-k it would change the survivors
+    val sampled = topk.filter(rand(7) < 0.5)
+    assert(!filterBelowTopK(sampled), sampled.queryExecution.optimizedPlan)
+    assert(sampled.queryExecution.optimizedPlan.collectFirst {
+      case Filter(_, _: graft.plans.TopKPerKeyPlan) => true
+    }.isDefined, sampled.queryExecution.optimizedPlan)
   }
 
   test("correctness on a tiny hand fixture with ties") {

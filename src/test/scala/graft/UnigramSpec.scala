@@ -95,7 +95,6 @@ class UnigramSpec extends SparkSpec {
     val back = graft.sources.TokenizerStore.read(spark, dir)
     assert(back == table, "round-trip must preserve pieces, probs, order")
     // the reloaded table serves identically through the kernel
-    graft.plans.GraftFunctions.register(spark)
     val docs = Seq((1L, "ping pong pingpongping"), (2L, "pong pingpong"))
       .toDF("doc_id", "text")
     def digests(t: Seq[(String, Double)]) = docs
