@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -40,6 +42,20 @@ object Bench {
     * spec'd. The session loads [[graft.plans.GraftExtensions]], which
     * installs every graft kernel, the top-k strategy and its filter
     * pushdown. SPARK_GRAFT_MASTER overrides the `local[cpus]` master.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes Spark's LRU cache of
+    * compiled generated classes. Its default of 100 is smaller than one
+    * pass of the composed pipelines, so every lookup missed and each
+    * warm pass re-ran Janino on every stage (curate_e2e, dedup_pipeline
+    * and dedup_cluster on 1,000 docs, 4 cores: 327 compiles, 3.2 s of a
+    * 9.3 s pass). A whole-stage class takes two entries, because the
+    * key includes the compiling thread's classloader (the driver's and
+    * the task threads'). One cold and three warm passes of that step
+    * set leave 311 entries; 1000 is better than 3x that.
+    * It is a STATIC conf: `CodeGenerator` reads it once per JVM, when
+    * its cache is first used, so it takes effect only if this factory
+    * builds the JVM's first session (SessionDriftSpec keeps other
+    * builders out of src/main).
     */
   def buildSession(cpus: String = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
@@ -53,6 +69,7 @@ object Bench {
       // wide aggs (64-col simhash/minhash signatures) exceed the
       // default codegen field limit of 100
       .config("spark.sql.codegen.maxFields", "300")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -71,6 +88,14 @@ object Bench {
       .groupBy("k").sum("v").write.format("noop").mode("overwrite").save()
     Tables(spark, sfDir, "nation").join(Tables(spark, sfDir, "region"))
       .write.format("noop").mode("overwrite").save()
+  }
+
+  /** Drops cached frames and checkpointed RDDs between runs: leftover
+    * storage blocks squeeze unified execution memory for later ones. */
+  def dropResidue(spark: SparkSession): Unit = {
+    spark.sqlContext.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** Sub-second queries swing ±30-50% run-to-run on identical code
@@ -116,6 +141,10 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
       }
+      // codegen over every timed sample: past the first sample, each
+      // compile is a miss in Spark's generated-class cache
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val base = (1 to runs).map(_ => sample())
       val median = if (base.exists(_ < 0)) -1.0
                    else base.sorted.apply(runs / 2)
@@ -126,6 +155,8 @@ object Bench {
             runs < NoiseExtraRuns)
           base ++ (1 to (NoiseExtraRuns - runs)).map(_ => sample())
         else base
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       val (sec, stat) =
         if (samples.exists(_ < 0)) (-1.0, "failed")
         else if (samples.length >= NoiseExtraRuns) {
@@ -133,10 +164,8 @@ object Bench {
           (s.sum / s.length, "trimmed" + samples.length)
         } else (median, "median" + samples.length)
       val spread = if (sec < 0) -1.0 else samples.max - samples.min
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      report(s"""{"query":"$name","sec":$sec,"runs":${samples.length},"stat":"$stat","spread":${f"$spread%.4f"},"sf":"$sfDir"}""")
+      dropResidue(spark)
+      report(s"""{"query":"$name","sec":$sec,"runs":${samples.length},"stat":"$stat","spread":${f"$spread%.4f"},"codegen_compiles":$compiles,"codegen_ms":${f"$compileMs%.1f"},"sf":"$sfDir"}""")
       name -> sec
     }
   }

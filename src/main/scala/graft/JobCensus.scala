@@ -58,9 +58,7 @@ object JobCensus {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t) / 1e9
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      Bench.dropResidue(spark)
       // the listener bus is async and a fixed sleep can under-wait on a
       // loaded box (late stage events would then pollute the NEXT run's
       // delta): poll until every counter is quiet for 500 ms, capped at

@@ -16,6 +16,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("the spec session carries the factory's config and strategies") {
     assert(spark.conf.get("spark.sql.codegen.maxFields") == "300")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(spark.sessionState.planner.strategies.contains(TopKStrategy))
   }
 
