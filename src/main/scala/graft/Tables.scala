@@ -2,44 +2,56 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.StructType
 
-/** Typed loaders for the driver-generated parquet tables (TESTDATA.md).
+/** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * `events.ts` is written as parquet INT64 TIMESTAMP(NANOS). Spark's
-  * TimestampType is microsecond-precision; if this Spark build rejects
-  * NANOS we re-read with `nanosAsLong` and truncate to micros — the same
-  * truncation DuckDB applies casting ns → TIMESTAMP, so oracle
-  * comparisons stay exact.
+  * Each driver table opens with its declared schema, the way a catalog
+  * serves a table: the open lists the files and runs no Spark job. An
+  * open without a schema runs one job per read to merge the parquet
+  * footers (`ParquetUtils.inferSchema`), and every query pays it for
+  * every table it reads. The declarations equal what Spark infers for
+  * every scale factor of the test data; DeclaredSchemaSpec pins this,
+  * so test data that drifts from a declaration fails there rather than
+  * at a query's scan. Timestamps are stored as INT64 micros without UTC
+  * adjustment, which Spark reads as TIMESTAMP_NTZ. A name outside
+  * [[names]] (a caller's own parquet directory) is read with an
+  * inferred schema.
   */
 object Tables {
-  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
+  private val ddl: Seq[(String, String)] = Seq(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" ->
+      "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+
+  val names: Seq[String] = ddl.map(_._1)
+
+  /** The declared schema of each driver table. */
+  val schemas: Map[String, StructType] =
+    ddl.map { case (n, d) => n -> StructType.fromDDL(d) }.toMap
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    schemas.get(name).fold(spark.read)(s => spark.read.schema(s))
+      .parquet(s"$dir/$name.parquet")
 
-  // Integral DIV, not `/`: epoch-nanos (~1.7e18) exceeds double's 53-bit
-  // mantissa, so float division here would drift timestamps by ±1 µs.
-  private def nsLongToTs(df: DataFrame): DataFrame =
-    df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    try {
-      val df = spark.read.parquet(path)
-      if (df.schema("ts").dataType == LongType) nsLongToTs(df) else df
-    } catch {
-      // ONLY the nanos-precision rejection gets the legacy-conf retry;
-      // a missing/corrupt file must surface its real error, not a
-      // misleading second failure after a session-global conf mutation
-      case e: Exception if e.getMessage != null &&
-          e.getMessage.contains("TIMESTAMP(NANOS") =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        nsLongToTs(spark.read.parquet(path))
-    }
-  }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    apply(spark, dir, "events")
 
   /** Rebalance a frame for expensive per-row compute when the scan
     * yields fewer partitions than the session's parallelism — the

@@ -3,6 +3,7 @@ package graft.sources
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Dedup fingerprint-store persistence (SURVEY.md §2 sources/sinks:
   * sink_fingerprints) — the "derive once, probe forever" contract the
@@ -54,6 +55,29 @@ object Fingerprints {
     */
   val FormatVersion = 2
 
+  /** Declared schema of each frame, part of the store format that
+    * [[FormatVersion]] versions. Every reader opens a frame with it, so
+    * an open lists the files and runs no Spark job (an inferred read
+    * runs one to merge parquet footers). DeclaredSchemaSpec pins each
+    * equal to what Spark infers from the files the writers leave. */
+  val ContentSchema: StructType = StructType.fromDDL("th STRING")
+  val BandsSchema: StructType = StructType.fromDDL("band_val BIGINT")
+  val SpansSchema: StructType = StructType.fromDDL("h STRING")
+  /** Both perceptual tiers, `phash_bands/` and `ahash_bands/`. */
+  val PerceptualBandsSchema: StructType =
+    StructType.fromDDL("band_id BIGINT, band_key BIGINT")
+
+  private val textFrames = Seq("content" -> ContentSchema,
+    "bands" -> BandsSchema, "spans" -> SpansSchema)
+
+  /** Distinct rows, range-sharded into `nShards` and sorted within
+    * each shard on every column. */
+  private def rangeShard(df: DataFrame, nShards: Int): DataFrame = {
+    val keys = df.columns.toSeq.map(col)
+    df.distinct().repartitionByRange(nShards, keys: _*)
+      .sortWithinPartitions(keys: _*)
+  }
+
   private def writeMarker(spark: SparkSession, path: String): Unit =
     StoreMaintenance.markFormat(spark, path, FormatVersion)
 
@@ -68,15 +92,12 @@ object Fingerprints {
 
   private def writeFrames(docs: DataFrame, path: String, nShards: Int,
       mode: String): Unit = {
-    def shard(df: DataFrame, key: String, sub: String): Unit =
-      df.distinct()
-        .repartitionByRange(nShards, col(key))
-        .sortWithinPartitions(col(key))
-        .write.mode(mode).parquet(s"$path/$sub")
-    shard(docs.select(md5(col("text")).as("th")), "th", "content")
+    def shard(df: DataFrame, sub: String): Unit =
+      rangeShard(df, nShards).write.mode(mode).parquet(s"$path/$sub")
+    shard(docs.select(md5(col("text")).as("th")), "content")
     shard(Dedup.minhashSigs(docs)
-      .select(explode(col("bands")).as("band_val")), "band_val", "bands")
-    shard(Dedup.spanHashes(docs).select(col("h")), "h", "spans")
+      .select(explode(col("bands")).as("band_val")), "bands")
+    shard(Dedup.spanHashes(docs).select(col("h")), "spans")
     writeMarker(docs.sparkSession, path)
   }
 
@@ -110,20 +131,17 @@ object Fingerprints {
     * either the old files or the new — never a half-written frame.
     */
   def compact(spark: SparkSession, path: String, nShards: Int = 4): Unit =
-    Seq("content" -> "th", "bands" -> "band_val", "spans" -> "h")
-      .foreach { case (sub, key) =>
-        val (dir, tmp, old) = StoreMaintenance.staging(path, sub)
-        // heal a crashed previous compaction BEFORE testing liveness —
-        // a death inside the swap window leaves the frame as `.old`
-        StoreMaintenance.recover(spark, dir, tmp, old)
-        if (StoreMaintenance.exists(spark, dir)) {
-          spark.read.parquet(dir.toString).distinct()
-            .repartitionByRange(nShards, col(key))
-            .sortWithinPartitions(col(key))
-            .write.mode("overwrite").parquet(tmp.toString)
-          StoreMaintenance.swap(spark, dir, tmp, old)
-        }
+    textFrames.foreach { case (sub, schema) =>
+      val (dir, tmp, old) = StoreMaintenance.staging(path, sub)
+      // heal a crashed previous compaction BEFORE testing liveness —
+      // a death inside the swap window leaves the frame as `.old`
+      StoreMaintenance.recover(spark, dir, tmp, old)
+      if (StoreMaintenance.exists(spark, dir)) {
+        rangeShard(spark.read.schema(schema).parquet(dir.toString), nShards)
+          .write.mode("overwrite").parquet(tmp.toString)
+        StoreMaintenance.swap(spark, dir, tmp, old)
       }
+    }
 
   /** Multimodal extension of the store: distinct 16-bit hamming-band
     * keys of perceptual hashes — `phash_bands/` holds the image+clip
@@ -134,15 +152,13 @@ object Fingerprints {
     */
   def writePhashBands(hashes: DataFrame, path: String, nShards: Int = 1,
       mode: String = "overwrite", sub: String = "phash_bands"): Unit =
-    graft.operators.Multimodal.phashBandRows(hashes)
-      .select(col("band_id"), col("band_key")).distinct()
-      .repartitionByRange(nShards, col("band_id"), col("band_key"))
-      .sortWithinPartitions(col("band_id"), col("band_key"))
+    rangeShard(graft.operators.Multimodal.phashBandRows(hashes)
+        .select(col("band_id"), col("band_key")), nShards)
       .write.mode(mode).parquet(s"$path/$sub")
 
   def readPhashBands(spark: SparkSession, path: String,
       sub: String = "phash_bands"): DataFrame =
-    spark.read.parquet(s"$path/$sub")
+    spark.read.schema(PerceptualBandsSchema).parquet(s"$path/$sub")
 
   /** [[readPhashBands]], tolerating a store with no perceptual tier
     * yet: a text-history store (write() builds content/bands/spans
@@ -160,25 +176,21 @@ object Fingerprints {
     if (fs.exists(p)) readPhashBands(spark, path, sub)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("band_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("band_key",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+      PerceptualBandsSchema)
   }
 
   def readContent(spark: SparkSession, path: String): DataFrame = {
     checkFormat(spark, path)
-    spark.read.parquet(s"$path/content")
+    spark.read.schema(ContentSchema).parquet(s"$path/content")
   }
 
   def readBands(spark: SparkSession, path: String): DataFrame = {
     checkFormat(spark, path)
-    spark.read.parquet(s"$path/bands")
+    spark.read.schema(BandsSchema).parquet(s"$path/bands")
   }
 
   def readSpans(spark: SparkSession, path: String): DataFrame = {
     checkFormat(spark, path)
-    spark.read.parquet(s"$path/spans")
+    spark.read.schema(SpansSchema).parquet(s"$path/spans")
   }
 }

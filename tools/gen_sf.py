@@ -20,7 +20,7 @@ region/nation are FIXED dimension tables (5 / 25 rows — they do not
 scale with sf in TPC-H either) and are copied from the sf0.1 originals;
 customer/supplier/part/orders generate at 10x with the measured sf0.1
 schemas and value domains. These use a SEPARATE rng (seed 4243) so the
-four r06 tables above remain byte-identical to every earlier sweep.
+four r06 tables above remain value-identical to every earlier sweep.
 """
 import sys
 import numpy as np
@@ -115,7 +115,8 @@ def gen_lineitem(out, n, mult, rng):
             np.array(["A", "N", "R"])[rng.integers(0, 3, n)]),
         "l_linestatus": pa.array(np.array(["O", "F"])[rng.integers(0, 2, n)]),
         "l_shipdate": pa.array(
-            day0 + rng.integers(0, 2500, n).astype("timedelta64[D]")),
+            (day0 + rng.integers(0, 2500, n).astype("timedelta64[D]"))
+            .astype("datetime64[us]"), pa.timestamp("us")),
     })
     pq.write_table(t, f"{out}/lineitem.parquet")
 
