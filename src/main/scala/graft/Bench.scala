@@ -13,21 +13,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * written to the `noop` sink so EVERY output column is computed —
   * `count()` would let Spark prune the projections being measured.
   * Each query runs [[Bench.runs]] times and reports the MEDIAN:
-  * run-to-run noise on a busy box is ±25 % of a single run (SURVEY §7),
-  * which made round-over-round deltas arguable; medians make them
+  * run-to-run noise on a busy box is ±25 % of a single run (the round
+  * logs in SURVEY.md's git history record the measurements), which
+  * made round-over-round deltas arguable; medians make them
   * trustworthy. Set SPARK_GRAFT_RUNS=1 for quick iteration.
-  *
-  * Same-session prev-round comparison (VERDICT r12 #2): round totals
-  * were never comparable round-over-round because the box's epoch
-  * varies ~1.5-2× day to day. If a jar of the PREVIOUS round's final
-  * code exists (tools/prev_round/graft-prev.jar, or
-  * SPARK_GRAFT_PREV_JAR), its Bench runs in a child JVM back-to-back
-  * with this one — same box epoch, same sf dir, same runs — and its
-  * summary is embedded as `prev_code_same_session` in this round's
-  * BENCH json. "Δ vs prev round" is then a within-session ratio, not
-  * an across-epoch guess. SPARK_GRAFT_PREV_JAR=none disables (and is
-  * what the child itself receives, so the recursion depth is exactly
-  * one).
   */
 object Bench {
 
@@ -170,54 +159,6 @@ object Bench {
     }
   }
 
-  /** Runs the previous round's Bench from its pinned jar in a child
-    * JVM (same box epoch as the suite that just finished) and returns
-    * its final summary JSON line. Child stdout order is Bench's own
-    * contract: the LAST parseable `{"metric":...` line is the compact
-    * summary; the last one carrying `"queries"` is the full line —
-    * prefer the full line so the prev per-query map rides along. */
-  def runPrevJar(jar: String, sfDir: String, runs: Int,
-      cpus: String): Option[String] = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    // same module opens build.sbt gives forked runs (Spark 4 on JDK 17
-    // outside spark-submit)
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ opens ++ Seq(
-      s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-      "-cp", s"$jar:/opt/spark/jars/*", "graft.Bench")).toArray
-    val pb = new ProcessBuilder(cmd: _*)
-    val env = pb.environment()
-    env.put("SPARK_GRAFT_SF_DIR", sfDir)
-    env.put("SPARK_GRAFT_RUNS", runs.toString)
-    env.put("SPARK_GRAFT_CPUS", cpus)
-    env.put("SPARK_GRAFT_PREV_JAR", "none") // recursion guard: depth 1
-    env.put("SPARK_GRAFT_BENCH_OUT", "bench_prev_out.jsonl")
-    pb.redirectErrorStream(true)
-    try {
-      val p = pb.start()
-      // drain concurrently — the child writes more than a pipe buffer
-      val out = new java.io.ByteArrayOutputStream()
-      val drain = new Thread(() => p.getInputStream.transferTo(out))
-      drain.start()
-      val done = p.waitFor(45, java.util.concurrent.TimeUnit.MINUTES)
-      if (!done) { p.destroyForcibly(); return None }
-      drain.join(10000)
-      if (p.exitValue() != 0) return None
-      val lines = new String(out.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.filter(_.startsWith("{\"metric\"")).toSeq
-      lines.findLast(_.contains("\"queries\"")).orElse(lines.lastOption)
-    } catch { case _: Exception => None }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = buildSession()
@@ -253,19 +194,7 @@ object Bench {
     val total = if (ok.nonEmpty) ok.map(_._2).sum else 0.0
     spark.stop()
 
-    // prev-round same-session comparison AFTER the current suite and
-    // AFTER spark.stop() — the child gets the whole box, and both runs
-    // share one epoch. Skipped under SPARK_GRAFT_ONLY (a filtered total
-    // is not comparable to the prev jar's full suite).
-    val prevJar = sys.env.get("SPARK_GRAFT_PREV_JAR")
-      .orElse(Some("tools/prev_round/graft-prev.jar"))
-      .filter(p => p != "none" && p.nonEmpty && only.isEmpty &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-    val prev = prevJar.flatMap(j => runPrevJar(j, sfDir, runs, defaultCpus))
-    val prevField = prev.map(j => s""","prev_code_same_session":$j""")
-      .getOrElse("")
-
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"noise_floor_sec":$NoiseFloorSec,"queries":$qs,"failed":$failed,"sf":"$sfDir"$prevField}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"noise_floor_sec":$NoiseFloorSec,"queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     appendLine(line)
     println(line)
     // the full line above grows with the query count (~3 kB at 95
@@ -276,10 +205,7 @@ object Bench {
     // json-parses even when sbt appends its own epilogue to stdout.
     // Per-query numbers live in the preceding jsonl lines and the full
     // line either way.
-    val prevTotal = prev.flatMap(j =>
-      "\"value\":([0-9.]+)".r.findFirstMatchIn(j).map(_.group(1)))
-      .map(v => s""","prev_total_same_session":$v""").getOrElse("")
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"failed":$failed,"sf":"$sfDir"$prevTotal}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"failed":$failed,"sf":"$sfDir"}"""
     appendLine(compact)
     println(compact)
   }

@@ -100,8 +100,9 @@ object Demo {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val qStream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Float])]
-    val servedQ = streaming.Streams
-      .annServed(qStream.toDF().toDF("q_id", "q_emb"), index, 3)
+    val (served, serveHandle) = streaming.Streams
+      .annServedWith(qStream.toDF().toDF("q_id", "q_emb"), index, 3)
+    val servedQ = served
       .writeStream.format("memory").queryName("demo_served")
       .outputMode("append").start()
     qStream.addData(queries.toIndexedSeq: _*)
@@ -109,6 +110,7 @@ object Demo {
     println("[demo] streamed top-3 neighbors per live query:")
     spark.table("demo_served").orderBy(col("q_id"), col("rk")).show(false)
     servedQ.stop()
+    serveHandle.close()
 
     // 9. the retrieval surface over the synthetic tables (the demo
     //    corpus lacks the standing query's vocabulary): BM25 top-5,

@@ -3,6 +3,17 @@ package graft
 /** Plan-audit main: prints the formatted physical plan of one query
   * (or shuffle/scan summaries for all). Usage:
   *   runMain graft.Explain [queryName] [sfDir]
+  *
+  * Global-window audit list: the queries whose optimized plan holds an
+  * unpartitioned Window (`gwin=N` in the census), from
+  * `runMain graft.Explain ALL` over the sf0.001 test tables:
+  *   colloc_pmi 1, curate_e2e 1, curriculum_order 1, dp_card 1,
+  *   dsir_select 1, epoch_shuffle 1, eval_bootstrap 1, hybrid_rrf 3,
+  *   kv_cache_plan 1, longctx_stitch 1, mix_constrained 2, mm_pack 1,
+  *   pack_stats 1, search_bm25 1, seq_pack 1, sft_pack 1,
+  *   shard_rebalance 1, vocab_topk 1.
+  * A query that joins this list, or a count that grows, needs a
+  * bounded-frame argument before it lands.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -25,7 +36,7 @@ object Explain {
           // in this repo runs over a bounded frame (shard counts, the
           // √B superbucket sums, a capped sample); any NEW site over a
           // corpus-sized frame is a serial-stage bug. The audit list
-          // lives in OPTIMIZATION_r19.md; keep it current.
+          // is in this object's scaladoc; keep it current.
           val gwin = df.queryExecution.optimizedPlan.collect {
             case w: org.apache.spark.sql.catalyst.plans.logical.Window
                 if w.partitionSpec.isEmpty => w

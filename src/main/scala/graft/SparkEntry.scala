@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract: the queries Verify dumps and Bench times, and the
+  * DuckDB oracle SQL Verify writes next to them (SURVEY.md §5). */
 object SparkEntry {
 
   /** All implemented inventory rows from SURVEY.md §2. */

@@ -338,11 +338,12 @@ object Similarity {
     * 256} and 0.73 IS the probe ceiling (ann_ivf's own recall — the
     * remaining misses are cells never probed, which no rerank width
     * recovers), so 256 sits exactly at the knee. Cost stays bounded
-    * by queries·RerankK skinny float rows. Priced by graft.RerankCost
-    * (one session, all three PQ paths, rk ∈ {64,128,256}, medians of
-    * 3): the width's marginal cost is WITHIN NOISE at both sf0.1 and
-    * sf1 (sf1 medians rk64 → rk256: ann_pq 2.01 → 1.78 s, ann_ivf_pq
-    * 3.17 → 3.11 s, ann_filtered 3.04 → 3.25 s) while recall climbs
+    * by queries·RerankK skinny float rows. Priced by a one-off sweep
+    * main whose source git history keeps (one session, all three PQ
+    * paths, rk ∈ {64,128,256}, medians of 3): the width's marginal
+    * cost is WITHIN NOISE at both sf0.1 and sf1 (sf1 medians rk64 →
+    * rk256: ann_pq 2.01 → 1.78 s, ann_ivf_pq 3.17 → 3.11 s,
+    * ann_filtered 3.04 → 3.25 s) while recall climbs
     * 0.78 → 0.96 / 0.60 → 0.733 / 0.80 → 0.933 — the r14 prev-jar
     * bench deltas attributed to this dial were box noise, not rerank
     * cost (BENCH_sf1.json carries the sweep).
@@ -701,10 +702,9 @@ object Similarity {
     }
   }
 
-  /** ann_pq's body with the refine width as a dial (the RecallAudit /
-    * RerankCost sweep entry; the op serves the [[RerankK]] default). */
-  private[graft] def pqRank(s: SparkSession, dir: String,
-      rerankK: Int = RerankK): DataFrame = {
+  /** ann_pq's body: PQ-coded brute-force ADC, then an exact float
+    * re-rank of each query's [[RerankK]] shortlist. */
+  private[graft] def pqRank(s: SparkSession, dir: String): DataFrame = {
       val e = Tables(s, dir, "embeddings")
       val (cb, kEff) = pqCodebook(e, PqM, PqK, KmeansIters)
       val cbLit = lit(cb)
@@ -730,7 +730,7 @@ object Similarity {
       // once more for the ≤ queries·RerankK shortlist rows only
       val shortlist = graft.plans.TopK.perKey(scored, Seq("q_id"),
           Seq("cos" -> graft.plans.TopK.Desc,
-            "c_id" -> graft.plans.TopK.Asc), rerankK, "adc_rk")
+            "c_id" -> graft.plans.TopK.Asc), RerankK, "adc_rk")
         .select(col("q_id"), col("c_id"))
       val cf = e.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"))

@@ -626,35 +626,11 @@ object Streams {
 
   private val annServeSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private val annServeLegacy =
-    new java.util.concurrent.atomic.AtomicReference[AnnServeHandle](null)
-
-  /** Legacy no-handle overload: each call RELEASES the previous legacy
-    * call's temp function + broadcast (so a refresh loop on this API
-    * holds one live index, not an unbounded accumulation), at the cost
-    * of breaking any still-running stream served by that older index.
-    * Refresh loops that overlap streams must use [[annServedWith]] and
-    * close() each handle on its own stream's termination.
-    */
-  def annServed(queries: DataFrame, index: Seq[(Long, Seq[Int])],
-      k: Int): DataFrame = {
-    val (out, handle) = annServedWith(queries, index, k)
-    val prev = annServeLegacy.getAndSet(handle)
-    if (prev != null) {
-      // the previous index may still be serving a running stream — warn
-      // so concurrent users know to migrate to annServedWith + close()
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        "annServed: releasing the previous legacy serving index; any " +
-          "stream still using it will fail — use annServedWith for " +
-          "overlapping streams")
-      prev.close()
-    }
-    out
-  }
-
-  /** As [[annServed]], plus the [[AnnServeHandle]] the caller closes
-    * when the stream stops (e.g. from a StreamingQueryListener's
-    * onQueryTerminated) to release the index broadcast.
+  /** Serves `queries` (q_id, q_emb) against the int8 code `index`:
+    * each query's top-`k` (c_id, cos, rk) rows, plus the
+    * [[AnnServeHandle]] the caller closes when the stream stops (e.g.
+    * from a StreamingQueryListener's onQueryTerminated) to release the
+    * index broadcast.
     */
   def annServedWith(queries: DataFrame, index: Seq[(Long, Seq[Int])],
       k: Int): (DataFrame, AnnServeHandle) = {
@@ -674,7 +650,7 @@ object Streams {
     }
     val bc = ss.sparkContext.broadcast(graft.plans.AnnServe.Index(ids, codes, dim))
     // registered under a PER-CALL unique name so the builder closes
-    // over THIS index's broadcast and later annServed calls can never
+    // over THIS index's broadcast and later annServedWith calls can never
     // rebind a plan analyzed against an earlier index — two served
     // indices coexisting in one session stay isolated.
     val fn = s"graft_ann_serve_${annServeSeq.incrementAndGet()}"
@@ -2393,7 +2369,7 @@ object Streams {
     * (unknown-language caution). Bigram-less docs keep the batch
     * sentinel (-1.0 bits, 'tail') via a stateless union branch.
     * `v` is the bundle's one-row `meta/` scalar, read at stream BUILD
-    * time (model-load, not per-batch — the annServed lifecycle).
+    * time (model-load, not per-batch — the annServedWith lifecycle).
     */
   def perplexityGate(docs: DataFrame, bigrams: DataFrame,
       contexts: DataFrame, v: Long, cuts: DataFrame): DataFrame = {

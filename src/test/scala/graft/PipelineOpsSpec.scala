@@ -14,6 +14,38 @@ class PipelineOpsSpec extends SparkSpec {
   private def run(name: String) =
     all.find(_.name == name).get.query(spark, sfDir)
 
+  /** With AQE off, `name`'s plan has no WindowExec (`what` stays per-row
+    * local), and no exchange but a round-robin one carries text or
+    * tokens. */
+  private def assertTextStaysLocal(name: String, what: String): Unit = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = run(name).queryExecution.executedPlan
+      val windows = plan.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+      assert(windows.isEmpty,
+        s"$what must stay per-row local, got ${windows.size} WindowExecs:\n$plan")
+      plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+      }.foreach { e =>
+        // the ONLY exchange allowed to carry text is the conditional
+        // round-robin Tables.rebalance (structurally absent once the
+        // scan has >= defaultParallelism splits — i.e. at scale);
+        // keyed (hash/range) and broadcast exchanges must stay skinny
+        val roundRobin = e match {
+          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+            s.outputPartitioning.isInstanceOf[
+              org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]
+          case _ => false
+        }
+        assert(roundRobin || !e.output.exists(a => a.name == "text"
+            || a.name == "tok" || a.name == "toks"),
+          s"corpus text/tokens crossed a keyed exchange:\n$e")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("every pipeline op executes and returns rows") {
     all.foreach { op =>
       assert(op.query(spark, sfDir).count() > 0, s"${op.name} empty")
@@ -3197,32 +3229,7 @@ class PipelineOpsSpec extends SparkSpec {
     // span hashing is per-row local (r19: the fold replaced the old
     // posexplode → Window(doc_id) pipeline, so NO WindowExec and no
     // token rows in any exchange)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = run("dedup_substring").queryExecution.executedPlan
-      val windows = plan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }
-      assert(windows.isEmpty,
-        s"span hashing must stay per-row local, got ${windows.size} WindowExecs:\n$plan")
-      plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }.foreach { e =>
-        // the ONLY exchange allowed to carry text is the conditional
-        // round-robin Tables.rebalance (structurally absent once the
-        // scan has >= defaultParallelism splits — i.e. at scale);
-        // keyed (hash/range) and broadcast exchanges must stay skinny
-        val roundRobin = e match {
-          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-            s.outputPartitioning.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]
-          case _ => false
-        }
-        assert(roundRobin || !e.output.exists(a => a.name == "text"
-            || a.name == "tok" || a.name == "toks"),
-          s"corpus text/tokens crossed a keyed exchange:\n$e")
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assertTextStaysLocal("dedup_substring", "span hashing")
   }
 
   test("dedup_substr_ladder: per-W coverage from one lead frame; fixtures at every W") {
@@ -3269,32 +3276,7 @@ class PipelineOpsSpec extends SparkSpec {
     // the only exchanges left are the skinny (w, h) duplicate count
     // and the per-(doc, w) start-list fold, neither of which carries
     // text or raw tokens
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = run("dedup_substr_ladder").queryExecution.executedPlan
-      val windows = plan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }
-      assert(windows.isEmpty,
-        s"ladder hashing must stay per-row local, got ${windows.size} WindowExecs:\n$plan")
-      plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }.foreach { e =>
-        // the ONLY exchange allowed to carry text is the conditional
-        // round-robin Tables.rebalance (structurally absent once the
-        // scan has >= defaultParallelism splits — i.e. at scale);
-        // keyed (hash/range) and broadcast exchanges must stay skinny
-        val roundRobin = e match {
-          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-            s.outputPartitioning.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]
-          case _ => false
-        }
-        assert(roundRobin || !e.output.exists(a => a.name == "text"
-            || a.name == "tok" || a.name == "toks"),
-          s"corpus text/tokens crossed a keyed exchange:\n$e")
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assertTextStaysLocal("dedup_substr_ladder", "ladder hashing")
   }
 
   test("dedup_incremental: new docs checked against history only; asymmetric join") {
@@ -3322,32 +3304,7 @@ class PipelineOpsSpec extends SparkSpec {
     // the asymmetric-ingest contract: history joins in only as skinny
     // DISTINCT hash frames — its text reduces before any join, and no
     // history-with-history pairing exists anywhere in the plan
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = run("dedup_incremental").queryExecution.executedPlan
-      val windows = plan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }
-      assert(windows.isEmpty,
-        s"span hashing must stay per-row local, got ${windows.size} WindowExecs:\n$plan")
-      plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }.foreach { e =>
-        // the ONLY exchange allowed to carry text is the conditional
-        // round-robin Tables.rebalance (structurally absent once the
-        // scan has >= defaultParallelism splits — i.e. at scale);
-        // keyed (hash/range) and broadcast exchanges must stay skinny
-        val roundRobin = e match {
-          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-            s.outputPartitioning.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]
-          case _ => false
-        }
-        assert(roundRobin || !e.output.exists(a => a.name == "text"
-            || a.name == "tok" || a.name == "toks"),
-          s"corpus text/tokens crossed a keyed exchange:\n$e")
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assertTextStaysLocal("dedup_incremental", "span hashing")
   }
 
   test("dedup_incr_minhash: near-dups of history collide; fresh docs do not") {

@@ -2459,7 +2459,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val in = MemoryStream[(Long, Array[Float])]
-    val served = Streams.annServed(in.toDF().toDF("q_id", "q_emb"), index, 5)
+    val (served, handle) =
+      Streams.annServedWith(in.toDF().toDF("q_id", "q_emb"), index, 5)
     // the index ships as a broadcast HANDLE, never as plan content: no
     // literal in the plan may hold the index (the rejected typedlit
     // shape put every code into every serialized task), and the whole
@@ -2489,6 +2490,7 @@ class StreamingSpec extends SparkSpec {
     // append-stateless: no state store operator participated
     assert(q.lastProgress == null || q.lastProgress.stateOperators.isEmpty)
     q.stop()
+    handle.close()
     val batch = operators.Similarity.ops.find(_.name == "ann_quantized").get
       .query(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("c_id"),

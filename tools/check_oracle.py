@@ -1,6 +1,9 @@
-# Builder-side oracle check: mirrors the driver's DuckDB compare for the
-# queries present in OUTDIR (written by `runMain graft.Verify SFDIR OUTDIR
-# [names]`). Usage: python3 tools/check_oracle.py SFDIR OUTDIR [name ...]
+# Oracle check: compares each query's output in OUTDIR (written by
+# `runMain graft.Verify SFDIR OUTDIR [names]`) with its DuckDB oracle SQL.
+# Usage: python3 tools/check_oracle.py SFDIR OUTDIR [name ...]
+# Checks each named query, or every oracle_sql.json key when no names are
+# given. Verify writes no directory for a query that throws, so a missing
+# output counts as a failure. Exits 1 if any query fails.
 import sys, os, json, glob
 import duckdb
 
@@ -16,10 +19,12 @@ for t in ("region nation customer supplier part orders lineitem events "
     if os.path.exists(p):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-fail = 0
+fail = npass = 0
 for name in (names or sorted(oracles)):
     spark_dir = os.path.join(outdir, name)
     if not os.path.isdir(spark_dir):
+        fail += 1
+        print(f"{name}: FAIL no output")
         continue
     sql = oracles.get(name)
     if sql is None:
@@ -46,5 +51,7 @@ for name in (names or sorted(oracles)):
             for d in list(diff)[:4]:
                 print("   ", d)
     else:
+        npass += 1
         print(f"{name}: PASS ({len(sp)} rows)")
+print(f"{npass} pass, {fail} fail")
 sys.exit(1 if fail else 0)
