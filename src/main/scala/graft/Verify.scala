@@ -11,13 +11,16 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = Bench.buildSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val queries = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -36,5 +39,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // the last stderr line, below any executor log burst, names every
+    // failure of the run
+    System.err.println(s"[verify] ${failed.size} of ${queries.size} queries failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ",", "")))
   }
 }

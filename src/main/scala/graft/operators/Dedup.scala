@@ -750,28 +750,31 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
   }
 
-  private val opCluster = Op(
-    "dedup_cluster",
-    (s, dir) => {
-      val d = docs(s, dir)
-      // materialized once: the a-side and the shifted b-side would each
-      // re-run the narrow shingle-set kernel otherwise. Lazy (r19): the
-      // blocks land inside connectedComponents' eager edge-checkpoint
-      // job — persist-backed, so the kernel still runs once — with no
-      // stand-alone materialization job (guide §5)
-      val sh = shingleSets(d).localCheckpoint(eager = false)
-      val a = sh.select(col("doc_id"), col("sset").as("sa"))
-      val b = sh.select((col("doc_id") - 1).as("doc_id"), col("sset").as("sb"))
-      // verified near-dup edges: consecutive pairs sharing >= 1 shingle
-      val edges = a.join(b, Seq("doc_id"))
-        .filter(size(array_intersect(col("sa"), col("sb"))) >= 1)
-        .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-      connectedComponents(d.select(col("doc_id")), edges)
-        .select(col("doc_id"), col("lbl").as("cluster_id"),
-          when(col("doc_id") === col("lbl"), 1L).otherwise(0L).as("is_keeper"))
-    },
-    Some("""
-      WITH RECURSIVE sh AS (
+  /** The components of the toy consecutive-doc edge set that
+    * dedup_cluster and dedup_keep_best share: doc i links doc i + 1
+    * when their shingle sets share ≥ 1 shingle. Returns (doc_id, lbl),
+    * lbl the component's min doc_id; [[consecutiveCompCtes]] replays
+    * it in DuckDB. */
+  private def consecutiveComponents(d: DataFrame): DataFrame = {
+    // materialized once: the a-side and the shifted b-side would each
+    // re-run the narrow shingle-set kernel otherwise. Lazy (r19): the
+    // blocks land inside connectedComponents' eager edge-checkpoint
+    // job — persist-backed, so the kernel still runs once — with no
+    // stand-alone materialization job (guide §5)
+    val sh = shingleSets(d).localCheckpoint(eager = false)
+    val a = sh.select(col("doc_id"), col("sset").as("sa"))
+    val b = sh.select((col("doc_id") - 1).as("doc_id"), col("sset").as("sb"))
+    // verified near-dup edges: consecutive pairs sharing >= 1 shingle
+    val edges = a.join(b, Seq("doc_id"))
+      .filter(size(array_intersect(col("sa"), col("sb"))) >= 1)
+      .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
+    connectedComponents(d.select(col("doc_id")), edges)
+  }
+
+  /** DuckDB CTEs `sh, e, und, reach, comp` replaying
+    * [[consecutiveComponents]]; `comp(doc_id, cluster_id)`. Callers
+    * must prepend `WITH RECURSIVE `. */
+  private val consecutiveCompCtes = """sh AS (
         SELECT doc_id,
           list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
             THEN [array_to_string(list_slice(string_split(text, ' '), i+1, i+3), ' ')
@@ -788,7 +791,16 @@ object Dedup {
         UNION
         SELECT u.y, r.lbl FROM reach r JOIN und u ON u.x = r.node),
       comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id
-               FROM reach GROUP BY node)
+               FROM reach GROUP BY node)"""
+
+  private val opCluster = Op(
+    "dedup_cluster",
+    (s, dir) =>
+      consecutiveComponents(docs(s, dir))
+        .select(col("doc_id"), col("lbl").as("cluster_id"),
+          when(col("doc_id") === col("lbl"), 1L).otherwise(0L).as("is_keeper")),
+    Some(s"""
+      WITH RECURSIVE $consecutiveCompCtes
       SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
         CAST(CASE WHEN cluster_id = doc_id THEN 1 ELSE 0 END AS BIGINT) AS is_keeper
       FROM comp"""))
@@ -1574,23 +1586,13 @@ object Dedup {
   // window over the skinny (doc_id, cluster_id, div_ppm) frame: text
   // is read once for the per-row quality signal and never shuffles.
   private[graft] def keepBest(d: DataFrame): DataFrame = {
-    // lazy (r19): the blocks materialize inside connectedComponents'
-    // eager edge-checkpoint job (the first consumer), so the shingle
-    // scan runs once with no stand-alone materialization job (guide
-    // §5 — the mm_phash/neighborStats recipe)
-    val sh = shingleSets(d).localCheckpoint(eager = false)
-    val a = sh.select(col("doc_id"), col("sset").as("sa"))
-    val b = sh.select((col("doc_id") - 1).as("doc_id"), col("sset").as("sb"))
-    val edges = a.join(b, Seq("doc_id"))
-      .filter(size(array_intersect(col("sa"), col("sb"))) >= 1)
-      .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
     val qual = d.withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), expr(
         "(cast(size(array_distinct(toks)) as bigint) * 1000000)" +
           " div greatest(cast(size(toks) as bigint), 1)").as("div_ppm"))
     val byCluster = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster_id"))
-    connectedComponents(d.select(col("doc_id")), edges)
+    consecutiveComponents(d)
       .select(col("doc_id"), col("lbl").as("cluster_id"))
       .join(qual, Seq("doc_id"))
       .withColumn("rk", row_number().over(
@@ -1602,25 +1604,8 @@ object Dedup {
   private val opKeepBest = Op(
     "dedup_keep_best",
     (s, dir) => keepBest(docs(s, dir)),
-    Some("""
-      WITH RECURSIVE sh AS (
-        SELECT doc_id,
-          list_distinct(CASE WHEN len(string_split(text, ' ')) >= 3
-            THEN [array_to_string(list_slice(string_split(text, ' '), i+1, i+3), ' ')
-                  for i in generate_series(0, len(string_split(text, ' ')) - 3)]
-            ELSE [text] END) AS sset
-        FROM documents),
-      e AS (
-        SELECT a.doc_id AS x, a.doc_id + 1 AS y
-        FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        WHERE len(list_intersect(a.sset, b.sset)) >= 1),
-      und AS (SELECT x, y FROM e UNION ALL SELECT y AS x, x AS y FROM e),
-      reach(node, lbl) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT u.y, r.lbl FROM reach r JOIN und u ON u.x = r.node),
-      comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id
-               FROM reach GROUP BY node),
+    Some(s"""
+      WITH RECURSIVE $consecutiveCompCtes,
       qual AS (
         SELECT doc_id,
           (CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)

@@ -135,12 +135,8 @@ object QualityClassifier {
     * raw tokens IS the dot product with the hashed COUNT vector.
     * The weights are a single ArrayType literal — broadcast with the
     * plan, never shuffled. */
-  private[graft] def scoreCol(toks: Column, m: Model): Column = {
-    val w = typedLit(m.weights.toSeq)
-    val z = aggregate(featureIdx(toks), lit(m.intercept),
-      (acc, i) => acc + element_at(w, i + 1))
-    lit(1.0) / (lit(1.0) + exp(-z))
-  }
+  private[graft] def scoreCol(toks: Column, m: Model): Column =
+    scoreFromIdx(featureIdx(toks), m)
 
   /** Weak-labeled, feature-indexed corpus: doc_id, label (Gopher pass
     * bit), fidx — SKINNY: text stays OUT of the checkpoint (training
@@ -183,7 +179,8 @@ object QualityClassifier {
       round(scoreFromIdx(col("fidx"), m), 4).as("prob"))
       .withColumn("pred", (col("prob") >= 0.5).cast("long"))
 
-  /** [[scoreCol]] for a frame that already carries `fidx`. */
+  /** The fold behind [[scoreCol]], over feature indices a frame
+    * already carries (`fidx`). */
   private[graft] def scoreFromIdx(fidx: Column, m: Model): Column = {
     val w = typedLit(m.weights.toSeq)
     val z = aggregate(fidx, lit(m.intercept),

@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * the plan-size assertion in the stream_ann spec pins it out.
   *
   * Scoring matches the batch ann_quantized plan bit-for-bit: the same
-  * asymmetric float×int8 cosine as [[CosineFloatInt8]] (per-vector
-  * scale cancels, codes-only index), the same HALF_UP round to 6
-  * decimals BEFORE ranking (rounding can create ties whose c_id
-  * tie-break differs from the unrounded order), the same
+  * asymmetric float×int8 cosine as graft_cosine_i8
+  * ([[CosineSimilarity]]; per-vector scale cancels, codes-only index),
+  * the same HALF_UP round to 6 decimals BEFORE ranking (rounding can
+  * create ties whose c_id tie-break differs from the unrounded order),
+  * the same
   * (cos desc, c_id asc) order. Selection is a bounded insertion
   * top-k — O(index·dim) multiply-adds + O(k) per improving candidate,
   * never a full sort of the index.

@@ -1,10 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.CountMinSketch
@@ -34,98 +31,12 @@ import org.apache.spark.util.sketch.CountMinSketch
   *
   * `graft_cms_agg(token[, width])` → binary sketch;
   * `graft_cms_merge(bin[, width])` unions pre-built sketches (shard →
-  * fleet rollup); `graft_cms_est(bin, token)` → the point estimate;
+  * fleet rollup) — both [[SketchAggExpr]] over the [[CountMin]]
+  * family; `graft_cms_est(bin, token)` → the point estimate;
   * `graft_cms_total(bin)` → the stream length N the ε-bound scales
   * with. All sketches share [[CountMin.Seed]] — merge refuses
   * mismatched geometry, so width is a parameter, not per-row state.
   */
-case class CmsAggExpr(
-    child: Expression,
-    width: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMinSketch]
-  with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_cms_agg"
-
-  override def createAggregationBuffer(): CountMinSketch =
-    CountMinSketch.create(CountMin.DefaultDepth, width, CountMin.Seed)
-
-  override def update(buffer: CountMinSketch, input: InternalRow): CountMinSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.addString(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(buffer: CountMinSketch, other: CountMinSketch): CountMinSketch = {
-    buffer.mergeInPlace(other)
-    buffer
-  }
-
-  override def eval(buffer: CountMinSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: CountMinSketch): Array[Byte] =
-    buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): CountMinSketch =
-    CountMinSketch.readFrom(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsAggExpr =
-    copy(child = newChild)
-}
-
-/** Union of serialized count-min sketches — exact counter addition,
-  * so rollups lose nothing over the one-shot aggregation. */
-case class CmsMergeAggExpr(
-    child: Expression,
-    width: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMinSketch]
-  with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_cms_merge"
-
-  override def createAggregationBuffer(): CountMinSketch =
-    CountMinSketch.create(CountMin.DefaultDepth, width, CountMin.Seed)
-
-  override def update(buffer: CountMinSketch, input: InternalRow): CountMinSketch = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.mergeInPlace(CountMinSketch.readFrom(v.asInstanceOf[Array[Byte]]))
-    buffer
-  }
-
-  override def merge(buffer: CountMinSketch, other: CountMinSketch): CountMinSketch = {
-    buffer.mergeInPlace(other)
-    buffer
-  }
-
-  override def eval(buffer: CountMinSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: CountMinSketch): Array[Byte] =
-    buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): CountMinSketch =
-    CountMinSketch.readFrom(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsMergeAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsMergeAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsMergeAggExpr =
-    copy(child = newChild)
-}
-
 /** `graft_cms_est(bin, token)` → the point estimate for one item:
   * ≥ the true count always, ≤ true + ε·N w.h.p. */
 case class CmsEstExpr(left: Expression, right: Expression)
@@ -163,7 +74,9 @@ case class CmsTotalExpr(child: Expression)
     copy(child = newChild)
 }
 
-object CountMin {
+/** The count-min family of [[SketchAggExpr]]: the buffer is a
+  * [[CountMin.DefaultDepth]] × width counter array. */
+object CountMin extends SketchFamily[CountMinSketch] {
   /** ε ≈ 2/width = 0.0244 % of N per estimate; 8192 longs × depth
     * rows ≈ 320 KB per aggregation buffer — constant regardless of
     * corpus size. */
@@ -175,4 +88,11 @@ object CountMin {
   /** Shared hash seed: sketches merge only when geometry and seed
     * agree, so every graft CMS uses this one. */
   val Seed = 42
+
+  def name: String = "cms"
+  def create(width: Int): CountMinSketch = CountMinSketch.create(DefaultDepth, width, Seed)
+  def add(sk: CountMinSketch, v: Any): Unit = sk.addString(v.asInstanceOf[UTF8String].toString)
+  def combine(sk: CountMinSketch, other: CountMinSketch): Unit = sk.mergeInPlace(other)
+  def toBytes(sk: CountMinSketch): Array[Byte] = sk.toByteArray
+  def fromBytes(b: Array[Byte], width: Int): CountMinSketch = CountMinSketch.readFrom(b)
 }

@@ -6,8 +6,6 @@ import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,7 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    accuracy tax for choosing the scale-safe mode.
   *
   * `graft_freq_agg(token[, maxMapSize])` → binary sketch;
-  * `graft_freq_merge(bin[, maxMapSize])` unions pre-built sketches;
+  * `graft_freq_merge(bin[, maxMapSize])` unions pre-built sketches —
+  * both [[SketchAggExpr]] over the [[FreqItems]] family;
   * `graft_freq_topk(bin, k)` reads the top-k rows (descending
   * estimate, NO_FALSE_NEGATIVES) as structs; `graft_freq_maxerr(bin)`
   * exposes the sketch-wide error ceiling so downstream code can tell
@@ -41,98 +40,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * an implementation detail, so specs assert the published bounds and
   * the planted heavy-hitter set, not bit-equality.
   */
-case class FreqAggExpr(
-    child: Expression,
-    maxMapSize: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ItemsSketch[String]]
-  with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_freq_agg"
-
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
-
-  override def update(buffer: ItemsSketch[String], input: InternalRow): ItemsSketch[String] = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(buffer: ItemsSketch[String], other: ItemsSketch[String]): ItemsSketch[String] = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: ItemsSketch[String]): Any =
-    buffer.toByteArray(new ArrayOfStringsSerDe())
-
-  override def serialize(buffer: ItemsSketch[String]): Array[Byte] =
-    buffer.toByteArray(new ArrayOfStringsSerDe())
-
-  override def deserialize(bytes: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(bytes), new ArrayOfStringsSerDe())
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): FreqAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): FreqAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): FreqAggExpr =
-    copy(child = newChild)
-}
-
-/** Union of serialized frequent-items sketches — the shard → fleet
-  * rollup side: per-shard sketches come in as binary, leave as one
-  * merged binary whose error bounds still hold over the union.
-  */
-case class FreqMergeAggExpr(
-    child: Expression,
-    maxMapSize: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ItemsSketch[String]]
-  with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_freq_merge"
-
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
-
-  override def update(buffer: ItemsSketch[String], input: InternalRow): ItemsSketch[String] = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.merge(ItemsSketch.getInstance(
-        Memory.wrap(v.asInstanceOf[Array[Byte]]), new ArrayOfStringsSerDe()))
-    buffer
-  }
-
-  override def merge(buffer: ItemsSketch[String], other: ItemsSketch[String]): ItemsSketch[String] = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: ItemsSketch[String]): Any =
-    buffer.toByteArray(new ArrayOfStringsSerDe())
-
-  override def serialize(buffer: ItemsSketch[String]): Array[Byte] =
-    buffer.toByteArray(new ArrayOfStringsSerDe())
-
-  override def deserialize(bytes: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(bytes), new ArrayOfStringsSerDe())
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): FreqMergeAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): FreqMergeAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): FreqMergeAggExpr =
-    copy(child = newChild)
-}
-
 /** `graft_freq_topk(bin, k)` → the top-k heavy hitters as an array of
   * (token, est, lb, ub) structs, descending by estimate (ties by
   * token for a deterministic read-out), NO_FALSE_NEGATIVES policy:
@@ -194,10 +101,20 @@ case class FreqMaxErrExpr(child: Expression)
     copy(child = newChild)
 }
 
-object FreqItems {
+/** The frequent-items family of [[SketchAggExpr]]: the buffer is a
+  * map of at most maxMapSize tokens. */
+object FreqItems extends SketchFamily[ItemsSketch[String]] {
   /** Default map size: ε ≈ 3.5/4096 ≈ 0.085 % of the stream length,
     * 4096 entries ≈ a few hundred KB per partial — constant per
     * buffer regardless of corpus size. Must be a power of 2.
     */
   val DefaultMapSize = 4096
+
+  def name: String = "freq"
+  def create(maxMapSize: Int): ItemsSketch[String] = new ItemsSketch[String](maxMapSize)
+  def add(sk: ItemsSketch[String], v: Any): Unit = sk.update(v.asInstanceOf[UTF8String].toString)
+  def combine(sk: ItemsSketch[String], other: ItemsSketch[String]): Unit = sk.merge(other)
+  def toBytes(sk: ItemsSketch[String]): Array[Byte] = sk.toByteArray(new ArrayOfStringsSerDe())
+  def fromBytes(b: Array[Byte], maxMapSize: Int): ItemsSketch[String] =
+    ItemsSketch.getInstance(Memory.wrap(b), new ArrayOfStringsSerDe())
 }

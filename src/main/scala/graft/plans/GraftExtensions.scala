@@ -31,8 +31,6 @@ object GraftFunctions {
   // kernel parameters arrive as foldable literals and are baked into
   // the expression at build time
   private def int(e: Expression): Int = e.eval().asInstanceOf[Int]
-  private def intOr(exprs: Seq[Expression], i: Int, default: Int): Int =
-    if (exprs.length > i) int(exprs(i)) else default
   private def array(e: Expression): ArrayData = e.eval().asInstanceOf[ArrayData]
   private def strings(e: Expression): Seq[String] = {
     val arr = array(e)
@@ -40,13 +38,21 @@ object GraftFunctions {
   }
   private def floats(e: Expression): Seq[Float] = array(e).toFloatArray().toSeq
 
+  // `graft_<family>_agg(x[, param])` folds raw values, `_merge(bin[,
+  // param])` folds serialized sketches; the SQL name fixes which
+  private def sketchAgg[B](name: String, family: SketchFamily[B], default: Int,
+      merging: Boolean): Descriptor =
+    fn(name, classOf[SketchAggExpr[_]])(e =>
+      SketchAggExpr(e.head, family, if (e.length > 1) int(e(1)) else default, merging)
+        .toAggregateExpression())
+
   /** The one kernel list: a new kernel is one descriptor here. */
   val all: Seq[Descriptor] = Seq(
     fn("graft_nfc", classOf[NfcNormalizeExpr])(e => NfcNormalizeExpr(e.head)),
     fn("graft_cosine", classOf[CosineSimilarity])(e =>
       CosineSimilarity(e.head, e(1))),
-    fn("graft_cosine_i8", classOf[CosineFloatInt8])(e =>
-      CosineFloatInt8(e.head, e(1))),
+    fn("graft_cosine_i8", classOf[CosineSimilarity])(e =>
+      CosineSimilarity(e.head, e(1))),
     fn("graft_lcs", classOf[LcsLength])(e => LcsLength(e.head, e(1))),
     fn("graft_stem", classOf[StemTokens])(e => StemTokens(e.head)),
     fn("graft_lsh_keys", classOf[LshBandKeys])(e =>
@@ -108,43 +114,28 @@ object GraftFunctions {
       TopGramCount(e.head, e(1))),
     fn("graft_luma_resize", classOf[LumaResizeExpr])(e =>
       LumaResizeExpr(e.head, e(1), e(2))),
-    fn("graft_kll_agg", classOf[KllAggExpr])(e =>
-      KllAggExpr(e.head, intOr(e, 1, KllQuantiles.DefaultK))
-        .toAggregateExpression()),
-    fn("graft_kll_merge", classOf[KllMergeAggExpr])(e =>
-      KllMergeAggExpr(e.head, intOr(e, 1, KllQuantiles.DefaultK))
-        .toAggregateExpression()),
-    fn("graft_kll_quantile", classOf[KllQuantileExpr])(e =>
-      KllQuantileExpr(e.head, e(1))),
-    fn("graft_kll_rank", classOf[KllRankExpr])(e => KllRankExpr(e.head, e(1))),
-    fn("graft_freq_agg", classOf[FreqAggExpr])(e =>
-      FreqAggExpr(e.head, intOr(e, 1, FreqItems.DefaultMapSize))
-        .toAggregateExpression()),
-    fn("graft_freq_merge", classOf[FreqMergeAggExpr])(e =>
-      FreqMergeAggExpr(e.head, intOr(e, 1, FreqItems.DefaultMapSize))
-        .toAggregateExpression()),
+    sketchAgg("graft_kll_agg", KllQuantiles, KllQuantiles.DefaultK, merging = false),
+    sketchAgg("graft_kll_merge", KllQuantiles, KllQuantiles.DefaultK, merging = true),
+    fn("graft_kll_quantile", classOf[KllReadExpr])(e =>
+      KllReadExpr(e.head, e(1), rank = false)),
+    fn("graft_kll_rank", classOf[KllReadExpr])(e =>
+      KllReadExpr(e.head, e(1), rank = true)),
+    sketchAgg("graft_freq_agg", FreqItems, FreqItems.DefaultMapSize, merging = false),
+    sketchAgg("graft_freq_merge", FreqItems, FreqItems.DefaultMapSize, merging = true),
     fn("graft_freq_topk", classOf[FreqTopKExpr])(e =>
       FreqTopKExpr(e.head, e(1))),
     fn("graft_freq_maxerr", classOf[FreqMaxErrExpr])(e =>
       FreqMaxErrExpr(e.head)),
     fn("graft_hash_embed", classOf[HashEmbedExpr])(e => HashEmbedExpr(e.head)),
-    fn("graft_theta_agg", classOf[ThetaAggExpr])(e =>
-      ThetaAggExpr(e.head, intOr(e, 1, ThetaSketch.DefaultLgK))
-        .toAggregateExpression()),
-    fn("graft_theta_merge", classOf[ThetaMergeAggExpr])(e =>
-      ThetaMergeAggExpr(e.head, intOr(e, 1, ThetaSketch.DefaultLgK))
-        .toAggregateExpression()),
+    sketchAgg("graft_theta_agg", ThetaSketch, ThetaSketch.DefaultLgK, merging = false),
+    sketchAgg("graft_theta_merge", ThetaSketch, ThetaSketch.DefaultLgK, merging = true),
     fn("graft_theta_est", classOf[ThetaEstExpr])(e => ThetaEstExpr(e.head)),
-    fn("graft_theta_inter_est", classOf[ThetaInterEstExpr])(e =>
-      ThetaInterEstExpr(e.head, e(1))),
-    fn("graft_theta_union_est", classOf[ThetaUnionEstExpr])(e =>
-      ThetaUnionEstExpr(e.head, e(1))),
-    fn("graft_cms_agg", classOf[CmsAggExpr])(e =>
-      CmsAggExpr(e.head, intOr(e, 1, CountMin.DefaultWidth))
-        .toAggregateExpression()),
-    fn("graft_cms_merge", classOf[CmsMergeAggExpr])(e =>
-      CmsMergeAggExpr(e.head, intOr(e, 1, CountMin.DefaultWidth))
-        .toAggregateExpression()),
+    fn("graft_theta_inter_est", classOf[ThetaPairEstExpr])(e =>
+      ThetaPairEstExpr(e.head, e(1), union = false)),
+    fn("graft_theta_union_est", classOf[ThetaPairEstExpr])(e =>
+      ThetaPairEstExpr(e.head, e(1), union = true)),
+    sketchAgg("graft_cms_agg", CountMin, CountMin.DefaultWidth, merging = false),
+    sketchAgg("graft_cms_merge", CountMin, CountMin.DefaultWidth, merging = true),
     fn("graft_cms_est", classOf[CmsEstExpr])(e => CmsEstExpr(e.head, e(1))),
     fn("graft_cms_total", classOf[CmsTotalExpr])(e => CmsTotalExpr(e.head)))
 

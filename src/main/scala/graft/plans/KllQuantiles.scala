@@ -2,11 +2,8 @@ package graft.plans
 
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 
 /** Mergeable quantile sketches for fleet-stats at scale (the
@@ -23,140 +20,45 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * the value distribution.
   *
   * `graft_kll_agg(x)` → binary sketch; `graft_kll_merge(bin)` unions
-  * pre-built sketches (shard → fleet rollup); `graft_kll_quantile
-  * (bin, q)` / `graft_kll_rank(bin, v)` read estimates out. Compaction
-  * draws random bits (the published algorithm's coin), so two builds
-  * of the same data may differ structurally while both honoring the
-  * rank-error bound — specs assert the bound, not bit-equality.
+  * pre-built sketches (shard → fleet rollup) — both [[SketchAggExpr]]
+  * over the [[KllQuantiles]] family. Compaction draws random bits (the
+  * published algorithm's coin), so two builds of the same data may
+  * differ structurally while both honoring the rank-error bound —
+  * specs assert the bound, not bit-equality.
+  *
+  * `graft_kll_quantile(bin, q)` → the INCLUSIVE quantile estimate at
+  * normalized rank q ∈ [0, 1]; with `rank`, `graft_kll_rank(bin, v)` →
+  * the estimated normalized rank of value v (INCLUSIVE), its inverse.
+  * Both null on an empty sketch.
   */
-case class KllAggExpr(
-    child: Expression,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_kll_agg"
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buffer: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[Double])
-    buffer
-  }
-
-  override def merge(buffer: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: KllDoublesSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: KllDoublesSketch): Array[Byte] = buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllAggExpr =
-    copy(child = newChild)
-}
-
-/** Union of serialized KLL sketches — the shard→fleet rollup side:
-  * per-shard sketches come in as binary, leave as one merged binary.
-  */
-case class KllMergeAggExpr(
-    child: Expression,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_kll_merge"
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buffer: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.merge(KllDoublesSketch.heapify(Memory.wrap(v.asInstanceOf[Array[Byte]])))
-    buffer
-  }
-
-  override def merge(buffer: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: KllDoublesSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: KllDoublesSketch): Array[Byte] = buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllMergeAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllMergeAggExpr =
-    copy(child = newChild)
-}
-
-/** `graft_kll_quantile(bin, q)` → the INCLUSIVE quantile estimate at
-  * normalized rank q ∈ [0, 1]; null on an empty sketch.
-  */
-case class KllQuantileExpr(left: Expression, right: Expression)
+case class KllReadExpr(left: Expression, right: Expression, rank: Boolean)
     extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def inputTypes = Seq(BinaryType, DoubleType)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_kll_quantile"
+  override def prettyName: String = if (rank) "graft_kll_rank" else "graft_kll_quantile"
 
-  override def nullSafeEval(bin: Any, q: Any): Any = {
+  override def nullSafeEval(bin: Any, x: Any): Any = {
     val sk = KllDoublesSketch.heapify(Memory.wrap(bin.asInstanceOf[Array[Byte]]))
-    if (sk.isEmpty) null else sk.getQuantile(q.asInstanceOf[Double])
+    val d = x.asInstanceOf[Double]
+    if (sk.isEmpty) null else if (rank) sk.getRank(d) else sk.getQuantile(d)
   }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): KllQuantileExpr =
+      newLeft: Expression, newRight: Expression): KllReadExpr =
     copy(left = newLeft, right = newRight)
 }
 
-/** `graft_kll_rank(bin, v)` → the estimated normalized rank of value
-  * v (INCLUSIVE); null on an empty sketch. The spec-side inverse of
-  * [[KllQuantileExpr]].
-  */
-case class KllRankExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
-
-  override def inputTypes = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_kll_rank"
-
-  override def nullSafeEval(bin: Any, v: Any): Any = {
-    val sk = KllDoublesSketch.heapify(Memory.wrap(bin.asInstanceOf[Array[Byte]]))
-    if (sk.isEmpty) null else sk.getRank(v.asInstanceOf[Double])
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): KllRankExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object KllQuantiles {
+/** The KLL family of [[SketchAggExpr]]: k is the sketch size. */
+object KllQuantiles extends SketchFamily[KllDoublesSketch] {
   /** Default sketch size parameter: ~1.65 % normalized rank error. */
   val DefaultK = 200
+
+  def name: String = "kll"
+  def create(k: Int): KllDoublesSketch = KllDoublesSketch.newHeapInstance(k)
+  def add(sk: KllDoublesSketch, v: Any): Unit = sk.update(v.asInstanceOf[Double])
+  def combine(sk: KllDoublesSketch, other: KllDoublesSketch): Unit = sk.merge(other)
+  def toBytes(sk: KllDoublesSketch): Array[Byte] = sk.toByteArray
+  def fromBytes(b: Array[Byte], k: Int): KllDoublesSketch = KllDoublesSketch.heapify(Memory.wrap(b))
 }

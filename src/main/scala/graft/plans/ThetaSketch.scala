@@ -1,13 +1,10 @@
 package graft.plans
 
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, Intersection, SetOperation, Sketch, Union}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.datasketches.theta.{SetOperation, Sketch, Union}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 
 /** Mergeable distinct-SET sketches (theta family; Apache DataSketches,
   * already on the classpath for HLL/KLL/Misra-Gries). HLL answers "how
@@ -31,104 +28,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, StringType}
   *
   * `graft_theta_agg(x[, lgK])` → binary compact sketch;
   * `graft_theta_merge(bin)` unions pre-built sketches (shard → fleet
-  * rollup); `graft_theta_est(bin)` reads the distinct estimate;
+  * rollup) — both [[SketchAggExpr]] over the [[ThetaSketch]] family;
+  * `graft_theta_est(bin)` reads the distinct estimate;
   * `graft_theta_inter_est(a, b)` / `graft_theta_union_est(a, b)`
   * evaluate the pairwise set expressions.
   */
-case class ThetaAggExpr(
-    child: Expression,
-    lgK: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_theta_agg"
-
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.toString)
-    buffer
-  }
-
-  override def merge(buffer: Union, other: Union): Union = {
-    buffer.union(other.getResult)
-    buffer
-  }
-
-  override def eval(buffer: Union): Any =
-    buffer.getResult.toByteArray
-
-  override def serialize(buffer: Union): Array[Byte] =
-    buffer.getResult.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = createAggregationBuffer()
-    u.union(Sketch.heapify(Memory.wrap(bytes)))
-    u
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ThetaAggExpr =
-    copy(child = newChild)
-}
-
-/** Union of serialized theta sketches — shard → fleet rollup: per-shard
-  * sketches come in as binary, leave as one merged binary. */
-case class ThetaMergeAggExpr(
-    child: Expression,
-    lgK: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_theta_merge"
-
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.union(Sketch.heapify(Memory.wrap(v.asInstanceOf[Array[Byte]])))
-    buffer
-  }
-
-  override def merge(buffer: Union, other: Union): Union = {
-    buffer.union(other.getResult)
-    buffer
-  }
-
-  override def eval(buffer: Union): Any =
-    buffer.getResult.toByteArray
-
-  override def serialize(buffer: Union): Array[Byte] =
-    buffer.getResult.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = createAggregationBuffer()
-    u.union(Sketch.heapify(Memory.wrap(bytes)))
-    u
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaMergeAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaMergeAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ThetaMergeAggExpr =
-    copy(child = newChild)
-}
-
-/** `graft_theta_est(bin)` → the distinct-count estimate. */
 case class ThetaEstExpr(child: Expression)
     extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
@@ -144,49 +48,49 @@ case class ThetaEstExpr(child: Expression)
     copy(child = newChild)
 }
 
-/** `graft_theta_inter_est(a, b)` → estimated |A ∩ B|. */
-case class ThetaInterEstExpr(left: Expression, right: Expression)
+/** `graft_theta_inter_est(a, b)` → estimated |A ∩ B|; with `union`,
+  * `graft_theta_union_est(a, b)` → estimated |A ∪ B|. */
+case class ThetaPairEstExpr(left: Expression, right: Expression, union: Boolean)
     extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def inputTypes = Seq(BinaryType, BinaryType)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def prettyName: String = "graft_theta_inter_est"
+  override def prettyName: String =
+    if (union) "graft_theta_union_est" else "graft_theta_inter_est"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val inter: Intersection = SetOperation.builder().buildIntersection()
-    inter.intersect(Sketch.heapify(Memory.wrap(a.asInstanceOf[Array[Byte]])))
-    inter.intersect(Sketch.heapify(Memory.wrap(b.asInstanceOf[Array[Byte]])))
-    inter.getResult.getEstimate
+    val sketches = Seq(a, b).map(x => Sketch.heapify(Memory.wrap(x.asInstanceOf[Array[Byte]])))
+    if (union) {
+      val u = SetOperation.builder().buildUnion()
+      sketches.foreach(u.union)
+      u.getResult.getEstimate
+    } else {
+      val inter = SetOperation.builder().buildIntersection()
+      sketches.foreach(inter.intersect)
+      inter.getResult.getEstimate
+    }
   }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ThetaInterEstExpr =
+      newLeft: Expression, newRight: Expression): ThetaPairEstExpr =
     copy(left = newLeft, right = newRight)
 }
 
-/** `graft_theta_union_est(a, b)` → estimated |A ∪ B|. */
-case class ThetaUnionEstExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
-
-  override def inputTypes = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_theta_union_est"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val u: Union = SetOperation.builder().buildUnion()
-    u.union(Sketch.heapify(Memory.wrap(a.asInstanceOf[Array[Byte]])))
-    u.union(Sketch.heapify(Memory.wrap(b.asInstanceOf[Array[Byte]])))
-    u.getResult.getEstimate
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ThetaUnionEstExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object ThetaSketch {
+/** The theta family of [[SketchAggExpr]]: the buffer is a union of
+  * 2^lgK nominal entries; the bytes are its compact result. */
+object ThetaSketch extends SketchFamily[Union] {
   /** Default log2 nominal entries: 4096 retained hashes ≈ 1.6 % RSE. */
   val DefaultLgK = 12
+
+  def name: String = "theta"
+  def create(lgK: Int): Union = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
+  def add(u: Union, v: Any): Unit = u.update(v.toString)
+  def combine(u: Union, other: Union): Unit = u.union(other.getResult)
+  def toBytes(u: Union): Array[Byte] = u.getResult.toByteArray
+  def fromBytes(b: Array[Byte], lgK: Int): Union = {
+    val u = create(lgK)
+    u.union(Sketch.heapify(Memory.wrap(b)))
+    u
+  }
 }

@@ -1,6 +1,11 @@
 package graft
 
-import graft.plans.{GraftFunctions, TopKStrategy}
+import graft.plans.{CosineSimilarity, GraftFunctions, TopKStrategy}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.types._
 
 /** The production wiring: the factory session loads
   * `graft.plans.GraftExtensions`, which installs every kernel of the
@@ -12,6 +17,56 @@ class ExtensionsSpec extends SparkSpec {
     val registry = spark.sessionState.functionRegistry
     val missing = GraftFunctions.all.map(_._1).filterNot(registry.functionExists)
     assert(missing.isEmpty, s"kernels not installed: $missing")
+  }
+
+  test("every graft.plans kernel, built from literal arguments, is named by its SQL name") {
+    // an unaliased column is named `<prettyName>(<args>)`, so a kernel
+    // whose prettyName drifts from its SQL name renames every such
+    // column; the agg/merge flavors share one class and differ only
+    // in how it is built
+    val one = Literal(1)
+    val floats = Literal.create(Seq(1.0f, 2.0f), ArrayType(FloatType))
+    val strings = Literal.create(Seq("a b"), ArrayType(StringType))
+    // the builders that evaluate a non-integer argument; every other
+    // kernel gets the integer 1 at each position
+    val args: Map[String, Seq[Expression]] = Map(
+      "graft_cosine_i8" -> Seq(floats, Literal.create(Seq(1, 2), ArrayType(IntegerType))),
+      "graft_bpe" -> Seq(strings, strings),
+      "graft_unigram" -> Seq(strings, strings, Literal.create(Seq(0.5), ArrayType(DoubleType))),
+      "graft_phrase_hits" -> Seq(strings, strings),
+      "graft_pq_encode" -> Seq(floats, floats, one, one),
+      "graft_pq_table" -> Seq(floats, floats, one, one),
+      "graft_pq_cos" -> Seq(floats, floats, floats, one, one),
+      "graft_pq_cos_t" -> Seq(floats, floats, floats, one, one))
+    val kernels = GraftFunctions.all.filter(_._2.getClassName.startsWith("graft.plans."))
+    assert(kernels.size == GraftFunctions.all.size - 2, "only the two bloom functions are Spark's")
+    kernels.foreach { case (id, _, build) =>
+      val built = build(args.getOrElse(id.funcName, Seq.fill(4)(one))) match {
+        case a: AggregateExpression => a.aggregateFunction
+        case e => e
+      }
+      assert(built.prettyName == id.funcName, s"${id.funcName} builds ${built.prettyName}")
+    }
+  }
+
+  test("graft_cosine and graft_cosine_i8 build one class: NULL on a length mismatch, interpreted and generated alike") {
+    val build = GraftFunctions.all.map(d => d._1.funcName -> d._3).toMap
+    val q = Literal.create(Seq(1.0f, 2.0f), ArrayType(FloatType))
+    val candidates = Seq(
+      "graft_cosine" -> ((n: Int) => Literal.create(Seq.tabulate(n)(i => 10.0f * (i + 1)), ArrayType(FloatType))),
+      "graft_cosine_i8" -> ((n: Int) => Literal.create(Seq.tabulate(n)(i => 10 * (i + 1)), ArrayType(IntegerType))))
+    candidates.foreach { case (name, codes) =>
+      def both(n: Int): (Any, Any) = {
+        val e = build(name)(Seq(q, codes(n)))
+        assert(e.isInstanceOf[CosineSimilarity], s"$name builds ${e.getClass}")
+        val row = GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty)
+        (e.eval(), if (row.isNullAt(0)) null else row.getDouble(0))
+      }
+      assert(both(3) == ((null, null)), s"$name: length mismatch must be NULL")
+      val (interpreted, generated) = both(2)
+      assert(math.abs(interpreted.asInstanceOf[Double] - 1.0) < 1e-12 && interpreted == generated,
+        s"$name: interpreted $interpreted, generated $generated")
+    }
   }
 
   test("the spec session carries the factory's config and strategies") {
