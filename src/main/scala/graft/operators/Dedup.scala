@@ -1368,6 +1368,28 @@ object Dedup {
       LEFT JOIN hh ON md5(f.text) = hh.th
       LEFT JOIN cov ON f.doc_id = cov.doc_id"""))
 
+  // ---- the ingest firewall's band probe (batch) ----
+
+  /** One probe for the minhash, image and clip tiers of the firewall
+    * (streaming twin: streaming.Streams.bandGate): `bands` (doc_id + the `keys` columns, one row per band
+    * of a doc) joins the DISTINCT `keys` of `store`, the hits count
+    * DISTINCT `slots` per doc into `count`, and `flag` is 1 at ≥ 1 hit.
+    * `docs` holds one row per doc; its columns lead the output, and a
+    * doc without a hit gets 0 in both. */
+  private[graft] def bandProbe(docs: DataFrame, bands: DataFrame,
+      store: DataFrame, keys: Seq[String], slots: Seq[String],
+      count: String, flag: String): DataFrame = {
+    val hits = bands
+      .join(store.select(keys.map(col): _*).distinct(), keys)
+      .groupBy(col("doc_id"))
+      .agg(countDistinct(col(slots.head), slots.tail.map(col): _*)
+        .as(count))
+    val n = coalesce(col(count), lit(0L))
+    docs.join(hits, Seq("doc_id"), "left")
+      .select(docs.columns.toSeq.map(col) :+ n.as(count) :+
+        when(n >= 1L, 1L).otherwise(0L).as(flag): _*)
+  }
+
   // ---- dedup_incr_minhash: NEAR-dup check of a shard vs history ----
   // dedup_incremental's exact/containment check extended to near-dups:
   // the standing corpus keeps only its DISTINCT LSH band values (8 per
@@ -1387,17 +1409,10 @@ object Dedup {
   private[graft] def incrementalMinhashFrom(fresh: DataFrame,
       histBands: DataFrame): DataFrame = {
     val freshSigs = minhashSigs(fresh)
-    val hits = freshSigs
-      .select(col("doc_id"), explode(col("bands")).as("band_val"))
-      .join(histBands.select(col("band_val")).distinct(), Seq("band_val"))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("band_val")).as("n_hist_bands"))
-    freshSigs.select(col("doc_id"), col("sig_digest"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("sig_digest"),
-        coalesce(col("n_hist_bands"), lit(0L)).as("n_hist_bands"),
-        when(coalesce(col("n_hist_bands"), lit(0L)) >= 1L, 1L)
-          .otherwise(0L).as("near_hist"))
+    bandProbe(freshSigs.select(col("doc_id"), col("sig_digest")),
+      freshSigs.select(col("doc_id"), explode(col("bands")).as("band_val")),
+      histBands, Seq("band_val"), Seq("band_val"),
+      "n_hist_bands", "near_hist")
   }
 
   private[graft] def incrementalMinhash(d: DataFrame, split: Long): DataFrame =

@@ -497,8 +497,9 @@ object Multimodal {
   /** 16-bit hamming-band rows (band_id, band_key) of a (…, phash)
     * frame — the dedup_simhash banding applied to perceptual hashes;
     * shared by the store writer (sources.Fingerprints.writePhashBands),
-    * the batch probe below and the streaming gate
-    * (streaming.Streams.ingestPhashGate).
+    * the batch probes below and the stream gates' band rows
+    * (streaming.Streams.ingestPhashGate, ingestAudioGate and
+    * ingestClipGate).
     */
   private[graft] def phashBandRows(df: DataFrame): DataFrame =
     df.withColumn("band_id", explode(sequence(lit(0L), lit(3L))))
@@ -512,18 +513,10 @@ object Multimodal {
     * once at store build, never per ingest.
     */
   private[graft] def phashProbe(hashes: DataFrame,
-      bandStore: DataFrame): DataFrame = {
-    val hits = phashBandRows(hashes)
-      .join(bandStore.select(col("band_id"), col("band_key")).distinct(),
-        Seq("band_id", "band_key"))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("band_id")).as("n_hist_bands"))
-    hashes.join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("phash"),
-        coalesce(col("n_hist_bands"), lit(0L)).as("n_hist_bands"),
-        when(coalesce(col("n_hist_bands"), lit(0L)) >= 1L, 1L)
-          .otherwise(0L).as("near_hist"))
-  }
+      bandStore: DataFrame): DataFrame =
+    Dedup.bandProbe(hashes.select(col("doc_id"), col("phash")),
+      phashBandRows(hashes), bandStore, Seq("band_id", "band_key"),
+      Seq("band_id"), "n_hist_bands", "near_hist")
 
   /** Clip-tier probe of the persisted band store: every SAMPLED
     * frame's 4 hamming bands probe `phash_bands/`, and a clip is
@@ -539,22 +532,12 @@ object Multimodal {
     * store keys.
     */
   private[graft] def clipProbe(frameHashes: DataFrame,
-      bandStore: DataFrame): DataFrame = {
-    val hits = phashBandRows(
-        frameHashes.select(col("doc_id"), col("frame_idx"),
-          col("frame_hash").as("phash")))
-      .join(bandStore.select(col("band_id"), col("band_key")).distinct(),
-        Seq("band_id", "band_key"))
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("frame_idx"), col("band_id"))
-        .as("n_clip_bands"))
-    frameHashes.select(col("doc_id")).distinct()
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_clip_bands"), lit(0L)).as("n_clip_bands"),
-        when(coalesce(col("n_clip_bands"), lit(0L)) >= 1L, 1L)
-          .otherwise(0L).as("clip_hist"))
-  }
+      bandStore: DataFrame): DataFrame =
+    Dedup.bandProbe(frameHashes.select(col("doc_id")).distinct(),
+      phashBandRows(frameHashes.select(col("doc_id"), col("frame_idx"),
+        col("frame_hash").as("phash"))),
+      bandStore, Seq("band_id", "band_key"), Seq("frame_idx", "band_id"),
+      "n_clip_bands", "clip_hist")
 
   // ---- mm_resize: in-engine thumbnailing for the encoder front ----
 

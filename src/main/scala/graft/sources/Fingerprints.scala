@@ -17,15 +17,24 @@ import org.apache.spark.sql.types.StructType
   * kv_store/kv_loading_interface.py persists derived per-doc state so
   * serving never recomputes it from raw inputs):
   *
-  *   content/  (th)        md5 content hashes → exact-dup gate
-  *                         (dedup_incremental, stream_ingest)
-  *   bands/    (band_val)  MinHash LSH band values, ≤ 8 longs/doc →
-  *                         near-dup gate (dedup_incr_minhash,
-  *                         stream_ingest_minhash)
-  *   spans/    (h)         W=8 token-span hashes → verbatim-containment
-  *                         coverage (dedup_incremental)
+  *   content/      (th)        md5 content hashes → exact-dup gate
+  *                             (dedup_incremental, stream_ingest)
+  *   bands/        (band_val)  MinHash LSH band values, ≤ 8 longs/doc
+  *                             → near-dup gate (dedup_incr_minhash,
+  *                             stream_ingest_minhash)
+  *   spans/        (h)         W=8 token-span hashes → verbatim-
+  *                             containment coverage (dedup_incremental)
+  *   phash_bands/  (band_id,   16-bit hamming bands of image and
+  *                  band_key)  sampled clip-frame dHashes → the image
+  *                             and clip gates (Ingest,
+  *                             stream_ingest_phash, stream_ingest_clip)
+  *   ahash_bands/  (band_id,   the same bands of audio envelope hashes
+  *                  band_key)  → the audio gate (Ingest,
+  *                             stream_ingest_audio)
   *
-  * All three are range-sharded on their hash key (the sink_shards
+  * The two perceptual frames exist once [[writePhashBands]] builds
+  * them or an ingest tick remembers an accepted multimodal shard. All
+  * five are range-sharded on their hash key (the sink_shards
   * layout): contiguous non-overlapping files a 1000-executor probe
   * join co-partitions against, and a growing corpus appends new
   * shards without rewriting old ones. Plain parquet — partition-
@@ -67,8 +76,11 @@ object Fingerprints {
   val PerceptualBandsSchema: StructType =
     StructType.fromDDL("band_id BIGINT, band_key BIGINT")
 
-  private val textFrames = Seq("content" -> ContentSchema,
-    "bands" -> BandsSchema, "spans" -> SpansSchema)
+  /** The store's five frames, each with its declared schema. */
+  private val frames = Seq("content" -> ContentSchema,
+    "bands" -> BandsSchema, "spans" -> SpansSchema,
+    "phash_bands" -> PerceptualBandsSchema,
+    "ahash_bands" -> PerceptualBandsSchema)
 
   /** Distinct rows, range-sharded into `nShards` and sorted within
     * each shard on every column. */
@@ -77,9 +89,6 @@ object Fingerprints {
     df.distinct().repartitionByRange(nShards, keys: _*)
       .sortWithinPartitions(keys: _*)
   }
-
-  private def writeMarker(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.markFormat(spark, path, FormatVersion)
 
   /** Missing marker on a non-empty store ⇒ built before versioning ⇒
     * signatures may predate the raw-byte minhash change ⇒ rebuild.
@@ -98,7 +107,7 @@ object Fingerprints {
     shard(Dedup.minhashSigs(docs)
       .select(explode(col("bands")).as("band_val")), "bands")
     shard(Dedup.spanHashes(docs).select(col("h")), "spans")
-    writeMarker(docs.sparkSession, path)
+    StoreMaintenance.markFormat(docs.sparkSession, path, FormatVersion)
   }
 
   def write(hist: DataFrame, path: String, nShards: Int = 4): Unit =
@@ -112,10 +121,13 @@ object Fingerprints {
     * every store consumer reduces its probe side to DISTINCT before
     * joining (spec'd), so append needs no read-modify-write of
     * history — at 100 TB a dedup-on-write would re-pay the store
-    * scan per ingest tick for no semantic gain.
+    * scan per ingest tick for no semantic gain. A frame that a
+    * compaction has moved aside is refused ([[isLive]]).
     */
   def append(shard: DataFrame, path: String, nShards: Int = 1): Unit = {
-    checkFormat(shard.sparkSession, path)
+    val s = shard.sparkSession
+    checkFormat(s, path)
+    Seq("content", "bands", "spans").foreach(isLive(s, path, _))
     writeFrames(shard, path, nShards, "append")
   }
 
@@ -128,10 +140,14 @@ object Fingerprints {
     * maintenance cadence (the stream_index → stream_compact
     * relationship, applied to the store tier). The rewrite stages
     * through a temp dir then swaps, so a reader mid-compaction sees
-    * either the old files or the new — never a half-written frame.
+    * either the old files or the new — never a half-written frame
+    * (inside the swap window itself the frame is missing, and every
+    * reader and appender fails loudly on it). A frame the store does
+    * not hold yet (a text-only store has no perceptual bands) is
+    * skipped.
     */
   def compact(spark: SparkSession, path: String, nShards: Int = 4): Unit =
-    textFrames.foreach { case (sub, schema) =>
+    frames.foreach { case (sub, schema) =>
       val (dir, tmp, old) = StoreMaintenance.staging(path, sub)
       // heal a crashed previous compaction BEFORE testing liveness —
       // a death inside the swap window leaves the frame as `.old`
@@ -151,10 +167,12 @@ object Fingerprints {
     * exactly once, here.
     */
   def writePhashBands(hashes: DataFrame, path: String, nShards: Int = 1,
-      mode: String = "overwrite", sub: String = "phash_bands"): Unit =
+      mode: String = "overwrite", sub: String = "phash_bands"): Unit = {
+    if (mode == "append") isLive(hashes.sparkSession, path, sub)
     rangeShard(graft.operators.Multimodal.phashBandRows(hashes)
         .select(col("band_id"), col("band_key")), nShards)
       .write.mode(mode).parquet(s"$path/$sub")
+  }
 
   def readPhashBands(spark: SparkSession, path: String,
       sub: String = "phash_bands"): DataFrame =
@@ -167,30 +185,46 @@ object Fingerprints {
     * construction; the tier then bootstraps itself through the
     * accepted-band append. The existence probe is one driver-side
     * filesystem call against the store root — the same class of
-    * bounded driver lookup as the counted broadcast guards.
+    * bounded driver lookup as the counted broadcast guards. A frame
+    * that a compaction has moved aside is refused ([[isLive]]), not
+    * read as empty.
     */
   def readPhashBandsOrEmpty(spark: SparkSession, path: String,
-      sub: String = "phash_bands"): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$sub")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) readPhashBands(spark, path, sub)
+      sub: String = "phash_bands"): DataFrame =
+    if (isLive(spark, path, sub)) readPhashBands(spark, path, sub)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       PerceptualBandsSchema)
+
+  /** Whether frame `sub` exists. Refuses one that a compaction has
+    * moved aside (live dir gone, `.sub.old` present: [[compact]] is
+    * inside its swap window or died there): read as an absent tier,
+    * its history would pass duplicates as new, and an append would
+    * start a fresh frame that the next compact's recovery keeps in
+    * place of `.old`. The next [[compact]] restores the frame. */
+  private def isLive(spark: SparkSession, path: String,
+      sub: String): Boolean = {
+    val (dir, _, old) = StoreMaintenance.staging(path, sub)
+    val live = StoreMaintenance.exists(spark, dir)
+    if (!live && StoreMaintenance.exists(spark, old))
+      throw new IllegalStateException(s"fingerprint store $path: $sub/ " +
+        s"is missing and .$sub.old holds its history (a compaction is " +
+        "mid-swap or died there); run Fingerprints.compact to restore it")
+    live
   }
 
-  def readContent(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.schema(ContentSchema).parquet(s"$path/content")
-  }
+  def readContent(spark: SparkSession, path: String): DataFrame =
+    readText(spark, path, "content", ContentSchema)
 
-  def readBands(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.schema(BandsSchema).parquet(s"$path/bands")
-  }
+  def readBands(spark: SparkSession, path: String): DataFrame =
+    readText(spark, path, "bands", BandsSchema)
 
-  def readSpans(spark: SparkSession, path: String): DataFrame = {
+  def readSpans(spark: SparkSession, path: String): DataFrame =
+    readText(spark, path, "spans", SpansSchema)
+
+  private def readText(spark: SparkSession, path: String, sub: String,
+      schema: StructType): DataFrame = {
     checkFormat(spark, path)
-    spark.read.schema(SpansSchema).parquet(s"$path/spans")
+    spark.read.schema(schema).parquet(s"$path/$sub")
   }
 }

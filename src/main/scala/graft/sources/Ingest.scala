@@ -26,25 +26,65 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
+  /** One perceptual tier of the firewall: the payload `kernel` (64-bit
+    * hash, null when it cannot decode the payload), the band sub-store
+    * it probes and remembers into, and its three decision columns.
+    * dHash and envelope bits live in unrelated spaces, so each tier
+    * owns its sub-store — sharing one would manufacture cross-modal
+    * collisions. */
+  private case class Tier(kernel: String, sub: String, nBands: String,
+      hist: String, decoded: String)
+
+  private val Tiers = Seq(
+    Tier("graft_dhash", "phash_bands", "n_img_bands", "img_hist",
+      "img_decoded"),
+    Tier("graft_ahash", "ahash_bands", "n_audio_bands", "audio_hist",
+      "audio_decoded"))
+
+  /** The decode-once payload-hash frames a tick computes exactly one
+    * time and feeds to BOTH the gate probes and the accepted-band
+    * appends (localCheckpoint pins the decoded pixels/samples so
+    * neither consumer re-runs the decoder): per perceptual tier its
+    * (doc_id, phash) frame, nulls kept for the decode audit; the
+    * clip tier's sampled (doc_id, frame_idx, frame_hash) frame. */
+  private case class HashFrames(perceptual: Map[Tier, DataFrame],
+      clipSampled: Option[DataFrame]) {
+    def hashes(t: Tier): Option[DataFrame] =
+      perceptual.get(t).map(_.filter(col("phash").isNotNull))
+    def clipHashes: Option[DataFrame] =
+      clipSampled.map(_.filter(col("frame_hash").isNotNull))
+  }
+
+  private def hashFrames(shard: DataFrame): HashFrames = HashFrames(
+    if (!shard.columns.contains("payload")) Map.empty
+    else Tiers.map(t => t -> shard.select(col("doc_id"),
+        expr(s"${t.kernel}(payload)").as("phash")).localCheckpoint()).toMap,
+    if (!shard.columns.contains("frames")) None
+    else Some(graft.operators.Multimodal.sampleFrames(
+        shard.select(col("doc_id"), col("frames"))).localCheckpoint()))
+
   /** One tick: gate `shard` against the store at `storePath`, append
     * the accepted docs' fingerprints, return the per-doc decision
     * frame (doc_id, bloom_pass, is_exact_dup, n_hist_bands,
     * near_hist, n_img_bands, img_hist, img_decoded, n_audio_bands,
     * audio_hist, audio_decoded, n_clip_bands, clip_hist,
     * n_clip_sampled, n_clip_decoded, accept).
-    * `img_decoded` / `n_clip_decoded` are the decode audit: a doc
-    * whose payload (or whose EVERY sampled frame) is undecodable
-    * cannot be probed against the perceptual store, so it reaches
-    * `accept` with img_hist/clip_hist = 0 — these columns let the
-    * caller quarantine that blind spot instead of trusting it.
+    * `img_decoded` / `audio_decoded` / `n_clip_decoded` are the
+    * decode audit: a doc whose payload (or whose EVERY sampled frame)
+    * is undecodable cannot be probed against the perceptual store, so
+    * it reaches `accept` with img_hist/audio_hist/clip_hist = 0 —
+    * these columns let the caller quarantine that blind spot instead
+    * of trusting it.
     *
-    * If the shard carries a binary `payload` column, image rows
-    * (PNG-decodable — graft_dhash yields null otherwise) also probe
-    * the store's `phash_bands/` frame (the stream_ingest_phash core):
-    * an exact or edited copy of any historical image band-collides
-    * and is rejected, and ACCEPTED images' bands append to the store
-    * so the next tick sees them — the multimodal half of the
-    * firewall. Text-only shards leave the two image columns at 0.
+    * If the shard carries a binary `payload` column, each perceptual
+    * [[Tier]] decodes it with its kernel (a null hash = undecodable)
+    * and probes its own band sub-store: image rows (graft_dhash) probe
+    * `phash_bands/` (the stream_ingest_phash core), audio rows
+    * (graft_ahash) probe `ahash_bands/` (stream_ingest_audio). An
+    * exact or edited copy of any historical payload band-collides and
+    * is rejected, and ACCEPTED payloads' bands append to the tier's
+    * sub-store so the next tick sees them — the multimodal half of the
+    * firewall. Text-only shards leave every tier column at 0.
     *
     * If the shard carries a `frames` column (array<binary> — the
     * video-shaped clip column), clips stride-sample BEFORE decode
@@ -55,41 +95,6 @@ object Ingest {
     * accepted clips' sampled-frame bands append so the next tick sees
     * them. The decode cost per arriving clip stays |frames|/stride.
     */
-  /** The decode-once payload-hash frames a tick computes exactly one
-    * time and feeds to BOTH the gate probes and the accepted-band
-    * appends (localCheckpoint pins the decoded pixels/samples so
-    * neither consumer re-runs the decoder). */
-  private case class HashFrames(
-      imgAll: Option[DataFrame], imgHashes: Option[DataFrame],
-      audioAll: Option[DataFrame], audioHashes: Option[DataFrame],
-      clipSampled: Option[DataFrame], clipHashes: Option[DataFrame],
-      clipCounts: Option[DataFrame])
-
-  private def hashFrames(shard: DataFrame): HashFrames = {
-    val imgAll = if (shard.columns.contains("payload")) {
-      Some(shard.select(col("doc_id"),
-          expr("graft_dhash(payload)").as("phash"))
-        .localCheckpoint())
-    } else None
-    val audioAll = if (shard.columns.contains("payload")) {
-      Some(shard.select(col("doc_id"),
-          expr("graft_ahash(payload)").as("phash"))
-        .localCheckpoint())
-    } else None
-    val clipSampled = if (shard.columns.contains("frames")) {
-      Some(graft.operators.Multimodal.sampleFrames(
-          shard.select(col("doc_id"), col("frames")))
-        .localCheckpoint())
-    } else None
-    HashFrames(
-      imgAll, imgAll.map(_.filter(col("phash").isNotNull)),
-      audioAll, audioAll.map(_.filter(col("phash").isNotNull)),
-      clipSampled, clipSampled.map(_.filter(col("frame_hash").isNotNull)),
-      clipSampled.map(_.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_clip_sampled"),
-          count(col("frame_hash")).as("n_clip_decoded"))))
-  }
-
   def gateAndRemember(shard: DataFrame, storePath: String,
       nShards: Int = 1): DataFrame = {
     val hs = hashFrames(shard)
@@ -97,6 +102,18 @@ object Ingest {
     remember(shard, decided.filter(col("accept") === 1L)
       .select(col("doc_id")), storePath, nShards, hs)
     decided
+  }
+
+  /** Append `cols` to `d`: from the per-doc frames `parts` (left-joined
+    * on doc_id, 0 where a doc has no row) when the shard carries the
+    * tier, else all 0. */
+  private def withTier(d: DataFrame, cols: Seq[String],
+      parts: Option[Seq[DataFrame]]): DataFrame = parts match {
+    case None => cols.foldLeft(d)(_.withColumn(_, lit(0L)))
+    case Some(ps) =>
+      cols.foldLeft(ps.foldLeft(d)(_.join(_, Seq("doc_id"), "left"))) {
+        (acc, c) => acc.withColumn(c, coalesce(col(c), lit(0L)))
+      }
   }
 
   /** The GATE half of a tick: probe the store, return the decision
@@ -108,94 +125,49 @@ object Ingest {
       Fingerprints.readContent(s, storePath))
     val near = graft.operators.Dedup.incrementalMinhashFrom(shard,
       Fingerprints.readBands(s, storePath))
-    // image tier: decode arriving pixels ONCE ([[hashFrames]] — the
-    // same frame feeds the probe and the accepted-band append)
-    val imgProbe = hs.imgHashes.map { h =>
-      graft.operators.Multimodal.phashProbe(h,
-          Fingerprints.readPhashBandsOrEmpty(s, storePath))
-        .select(col("doc_id"), col("n_hist_bands").as("n_img_bands"),
-          col("near_hist").as("img_hist"))
-    }
-    // audio tier (r13): WAV payloads decode to the energy-envelope
-    // hash (graft_ahash — PCM samples, no codec) and probe their OWN
-    // band sub-store `ahash_bands/`: dHash and envelope bits live in
-    // unrelated spaces, so sharing phash_bands would manufacture
-    // cross-modal collisions. Same asymmetric shape as the image
-    // tier — history audio is decoded once at store append, never
-    // per ingest tick.
-    val audioProbe = hs.audioHashes.map { h =>
-      graft.operators.Multimodal.phashProbe(h,
-          Fingerprints.readPhashBandsOrEmpty(s, storePath, "ahash_bands"))
-        .select(col("doc_id"), col("n_hist_bands").as("n_audio_bands"),
-          col("near_hist").as("audio_hist"))
-    }
-    // clip tier: stride-sample, THEN decode only survivors (the
-    // mm_frames contract), once ([[hashFrames]] — probe + append).
-    // decode audit (ADVICE r12): a clip whose sampled frames are ALL
-    // undecodable emits no probe row and would otherwise sail through
-    // the firewall untested (clip_hist = 0). Surface the per-doc
-    // sampled/decoded counts so callers can quarantine
-    // n_clip_decoded = 0 < n_clip_sampled shards; same audit for the
-    // image tier (img_decoded 0/1). `accept` semantics are unchanged —
-    // quarantine policy is the caller's (an undecodable payload may be
-    // a legitimate non-image format, not corruption).
-    val clipProbe = hs.clipHashes.map { h =>
-      graft.operators.Multimodal.clipProbe(h,
-        Fingerprints.readPhashBandsOrEmpty(s, storePath))
-    }
     val decided0 = exact
       .join(near.select(col("doc_id"), col("n_hist_bands"),
         col("near_hist")), Seq("doc_id"))
-    val withImg = imgProbe.fold(
-        decided0.withColumn("n_img_bands", lit(0L))
-          .withColumn("img_hist", lit(0L))
-          .withColumn("img_decoded", lit(0L))) { p =>
-        decided0.join(p, Seq("doc_id"), "left")
-          .join(hs.imgAll.get.select(col("doc_id"),
-            when(col("phash").isNotNull, 1L).otherwise(0L)
-              .as("img_decoded")), Seq("doc_id"), "left")
-          .withColumn("n_img_bands", coalesce(col("n_img_bands"), lit(0L)))
-          .withColumn("img_hist", coalesce(col("img_hist"), lit(0L)))
-          .withColumn("img_decoded", coalesce(col("img_decoded"), lit(0L)))
-      }
-    val withAudio = audioProbe.fold(
-        withImg.withColumn("n_audio_bands", lit(0L))
-          .withColumn("audio_hist", lit(0L))
-          .withColumn("audio_decoded", lit(0L))) { p =>
-        withImg.join(p, Seq("doc_id"), "left")
-          .join(hs.audioAll.get.select(col("doc_id"),
-            when(col("phash").isNotNull, 1L).otherwise(0L)
-              .as("audio_decoded")), Seq("doc_id"), "left")
-          .withColumn("n_audio_bands",
-            coalesce(col("n_audio_bands"), lit(0L)))
-          .withColumn("audio_hist", coalesce(col("audio_hist"), lit(0L)))
-          .withColumn("audio_decoded",
-            coalesce(col("audio_decoded"), lit(0L)))
-      }
-    val decided = clipProbe.fold(
-        withAudio.withColumn("n_clip_bands", lit(0L))
-          .withColumn("clip_hist", lit(0L))
-          .withColumn("n_clip_sampled", lit(0L))
-          .withColumn("n_clip_decoded", lit(0L))) { p =>
-        withAudio.join(p, Seq("doc_id"), "left")
-          .join(hs.clipCounts.get, Seq("doc_id"), "left")
-          .withColumn("n_clip_bands", coalesce(col("n_clip_bands"), lit(0L)))
-          .withColumn("clip_hist", coalesce(col("clip_hist"), lit(0L)))
-          .withColumn("n_clip_sampled",
-            coalesce(col("n_clip_sampled"), lit(0L)))
-          .withColumn("n_clip_decoded",
-            coalesce(col("n_clip_decoded"), lit(0L)))
-      }
+    // perceptual tiers: payloads decoded ONCE ([[hashFrames]] — the
+    // same frame feeds the probe and the accepted-band append). The
+    // `*_decoded` audit (ADVICE r12) is 0 for a doc whose payload the
+    // tier cannot decode: it emits no probe row and would otherwise
+    // sail through the firewall untested (`*_hist` = 0).
+    val withTiers = Tiers.foldLeft(decided0) { (d, t) =>
+      withTier(d, Seq(t.nBands, t.hist, t.decoded),
+        hs.perceptual.get(t).map { all => Seq(
+          graft.operators.Multimodal.phashProbe(hs.hashes(t).get,
+              Fingerprints.readPhashBandsOrEmpty(s, storePath, t.sub))
+            .select(col("doc_id"), col("n_hist_bands").as(t.nBands),
+              col("near_hist").as(t.hist)),
+          all.select(col("doc_id"), when(col("phash").isNotNull, 1L)
+            .otherwise(0L).as(t.decoded)))
+        })
+    }
+    // clip tier: stride-sample, THEN decode only survivors (the
+    // mm_frames contract), once ([[hashFrames]] — probe + append).
+    // Its decode audit is the per-doc sampled/decoded frame counts, so
+    // callers can quarantine n_clip_decoded = 0 < n_clip_sampled
+    // shards. `accept` semantics are unchanged by either audit —
+    // quarantine policy is the caller's (an undecodable payload may be
+    // a legitimate non-image format, not corruption).
+    val clipCols = Seq("n_clip_bands", "clip_hist", "n_clip_sampled",
+      "n_clip_decoded")
+    withTier(withTiers, clipCols, hs.clipSampled.map { c =>
+        Seq(graft.operators.Multimodal.clipProbe(hs.clipHashes.get,
+            Fingerprints.readPhashBandsOrEmpty(s, storePath)),
+          c.groupBy(col("doc_id"))
+            .agg(count(lit(1)).as("n_clip_sampled"),
+              count(col("frame_hash")).as("n_clip_decoded")))
+      })
       .withColumn("accept",
-        when(col("is_exact_dup") === 0L && col("near_hist") === 0L
-          && col("img_hist") === 0L && col("audio_hist") === 0L
-          && col("clip_hist") === 0L, 1L)
+        when((Seq("is_exact_dup", "near_hist") ++ Tiers.map(_.hist) :+
+            "clip_hist").map(col(_) === 0L).reduce(_ && _), 1L)
           .otherwise(0L))
       // the decision frame is consumed twice (append filter + the
       // caller's audit view) and the gates must not re-probe the store
       // after it has grown — pin it before the append mutates state
       .localCheckpoint()
-    decided
   }
 
   /** The REMEMBER half of a tick: append the accepted docs'
@@ -204,19 +176,17 @@ object Ingest {
       storePath: String, nShards: Int, hs: HashFrames): Unit = {
     Fingerprints.append(shard.join(acceptedIds, Seq("doc_id")),
       storePath, nShards)
-    hs.imgHashes.foreach { h =>
-      Fingerprints.writePhashBands(h.join(acceptedIds, Seq("doc_id")),
-        storePath, nShards, mode = "append")
+    Tiers.foreach { t =>
+      hs.hashes(t).foreach { h =>
+        Fingerprints.writePhashBands(h.join(acceptedIds, Seq("doc_id")),
+          storePath, nShards, mode = "append", sub = t.sub)
+      }
     }
     hs.clipHashes.foreach { h =>
       Fingerprints.writePhashBands(
         h.select(col("doc_id"), col("frame_hash").as("phash"))
           .join(acceptedIds, Seq("doc_id")),
         storePath, nShards, mode = "append")
-    }
-    hs.audioHashes.foreach { h =>
-      Fingerprints.writePhashBands(h.join(acceptedIds, Seq("doc_id")),
-        storePath, nShards, mode = "append", sub = "ahash_bands")
     }
   }
 
@@ -260,11 +230,10 @@ object Ingest {
       batchId: Long, nShards: Int = 1): DataFrame = {
     val s = shard.sparkSession
     val decDir = s"$decisionsPath/bid=$batchId"
-    val success = new org.apache.hadoop.fs.Path(s"$decDir/_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
     val hs = hashFrames(shard)
     val decided =
-      if (fs.exists(success)) s.read.parquet(decDir).localCheckpoint()
+      if (StoreMaintenance.exists(s, new org.apache.hadoop.fs.Path(
+          s"$decDir/_SUCCESS"))) s.read.parquet(decDir).localCheckpoint()
       else {
         val d = gateDecisions(shard, storePath, hs)
         d.write.mode("overwrite").parquet(decDir)

@@ -65,7 +65,7 @@ private[sources] object StoreMaintenance {
     ()
   }
 
-  // ---- store format versioning (shared across all six stores) ----
+  // ---- store format versioning (shared across all twelve stores) ----
   //
   // Every persisted bundle's rows are a deterministic function of some
   // engine-side semantic (minhash byte scheme, tokenizer, PQ codebook

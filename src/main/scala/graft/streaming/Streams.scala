@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Fns.cents
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -1150,10 +1150,54 @@ object Streams {
         coalesce(col("is_exact_dup"), lit(0L)).as("is_exact_dup"),
         md5(col("text")).as("content_hash"))
 
-  // ---- stream_ingest_minhash: near-dup gate vs the persisted store ----
+  // ---- the firewall's stream roll-up, shared by the four band gates ----
 
-  private[streaming] case class BandProbe(doc_id: Long, sig_digest: String,
-      band_val: Long, hit: Long)
+  /** One band row of an arriving doc: `slot` is what the roll-up counts
+    * distinct, `hit` is 1 when the store holds the band, and `digest` /
+    * `hash` carry the doc's signature digest or perceptual hash through
+    * to the output (unused fields hold "" / 0). */
+  private[streaming] case class GateProbe(doc_id: Long, digest: String,
+      hash: Long, slot: Long, hit: Long)
+
+  private[streaming] case class GateRoll(doc_id: Long, digest: String,
+      hash: Long, n: Long, flag: Long)
+
+  /** The per-doc roll-up of the four ingest band gates (batch core:
+    * operators.Dedup.bandProbe): `bands` (doc_id, digest, hash and the
+    * `keys` columns) left-joins the DISTINCT `keys` of the persisted
+    * store stream-static, and a zero-state flatMapGroupsWithState counts
+    * each doc's distinct hit `slot`s, flag at ≥ 1 — a doc's band rows
+    * all derive from its own row, so they arrive in ONE micro-batch and
+    * the group iterator sees them all; nothing needs the state store
+    * (the stream_index contract; state rows stay 0, spec-asserted). */
+  private def bandGate(bands: DataFrame, bandStore: DataFrame,
+      keys: Seq[String], slot: Column): Dataset[GateRoll] = {
+    import bands.sparkSession.implicits._
+    bands
+      .join(bandStore.select(keys.map(col): _*).distinct()
+          .withColumn("hit", lit(1L)),
+        keys, "left")
+      .select(col("doc_id"), col("digest"), col("hash"), slot.as("slot"),
+        coalesce(col("hit"), lit(0L)).as("hit"))
+      .as[GateProbe]
+      .groupByKey(_.doc_id)
+      .flatMapGroupsWithState[ZeroState, GateRoll](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (id: Long, in: Iterator[GateProbe],
+            state: GroupState[ZeroState]) =>
+          // bounded by construction: ≤ 8 band rows per doc, ≤ 4 per
+          // sampled frame
+          val rows = in.buffered
+          val first = rows.head
+          val matched = new java.util.HashSet[java.lang.Long]()
+          rows.foreach(p => if (p.hit == 1L) matched.add(p.slot))
+          val n = matched.size.toLong
+          Iterator.single(GateRoll(id, first.digest, first.hash, n,
+            if (n >= 1L) 1L else 0L))
+      }
+  }
+
+  // ---- stream_ingest_minhash: near-dup gate vs the persisted store ----
 
   case class MinhashGateOut(doc_id: Long, sig_digest: String,
       n_hist_bands: Long, near_hist: Long)
@@ -1163,12 +1207,10 @@ object Streams {
     * arriving doc's 8 LSH band values probe the PERSISTED band store
     * (sources.Fingerprints `bands/`) via a stream-static left join —
     * an (edited) copy of any historical doc collides on ≥ 1 band
-    * w.h.p. The per-doc roll-up (distinct matched bands) runs inside a
-    * zero-state flatMapGroupsWithState — a doc's 8 band rows arrive in
-    * ONE micro-batch, so the group iterator sees them all and nothing
-    * needs the state store (the stream_index contract; state rows stay
-    * 0, spec-asserted). Append mode, stateless: each doc leaves with
-    * its n_hist_bands the moment it arrives, equal to the batch
+    * w.h.p. The per-doc roll-up (distinct matched bands) is
+    * [[bandGate]]'s zero-state flatMapGroupsWithState. Append mode,
+    * stateless: each doc leaves with its n_hist_bands the moment it
+    * arrives, equal to the batch
     * dedup_incr_minhash's against the same store (spec across uneven
     * batch splits with a planted edited copy). The static side is the
     * RELOADED store parquet — at no point does ingest re-run the
@@ -1177,32 +1219,13 @@ object Streams {
   def ingestMinhashGate(docs: DataFrame, bandStore: DataFrame):
       Dataset[MinhashGateOut] = {
     import docs.sparkSession.implicits._
-    val probes = graft.operators.Dedup.minhashSigs(docs)
-      .select(col("doc_id"), col("sig_digest"),
-        explode(col("bands")).as("band_val"))
-      .join(bandStore.select(col("band_val")).distinct()
-          .withColumn("hit", lit(1L)),
-        Seq("band_val"), "left")
-      .select(col("doc_id"), col("sig_digest"), col("band_val"),
-        coalesce(col("hit"), lit(0L)).as("hit"))
-      .as[BandProbe]
-    probes.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[ZeroState, MinhashGateOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (id: Long, in: Iterator[BandProbe],
-            state: GroupState[ZeroState]) =>
-          // distinct matched band values — mirrors the batch
-          // countDistinct; 8 entries max, bounded by construction
-          val matched = new java.util.HashSet[java.lang.Long]()
-          var digest = ""
-          in.foreach { p =>
-            digest = p.sig_digest
-            if (p.hit == 1L) matched.add(p.band_val)
-          }
-          val n = matched.size.toLong
-          Iterator.single(MinhashGateOut(id, digest, n,
-            if (n >= 1L) 1L else 0L))
-      }
+    bandGate(graft.operators.Dedup.minhashSigs(docs)
+        .select(col("doc_id"), col("sig_digest").as("digest"),
+          lit(0L).as("hash"), explode(col("bands")).as("band_val")),
+      bandStore, Seq("band_val"), col("band_val"))
+      .select(col("doc_id"), col("digest").as("sig_digest"),
+        col("n").as("n_hist_bands"), col("flag").as("near_hist"))
+      .as[MinhashGateOut]
   }
 
   /** stream_frames — frame-sampling on ingest (batch twin: mm_frames):
@@ -1235,51 +1258,40 @@ object Streams {
 
   // ---- stream_ingest_phash: perceptual near-dup gate (multimodal) ----
 
-  private[streaming] case class PhashProbeRow(doc_id: Long, phash: Long,
-      band_id: Long, hit: Long)
-
   case class PhashGateOut(doc_id: Long, phash: Long,
       n_hist_bands: Long, near_hist: Long)
+
+  /** [[bandGate]] over the 4 hamming bands of each payload's 64-bit
+    * perceptual hash under `kernel`; payloads the kernel cannot decode
+    * emit no row. */
+  private def perceptualGate(docs: DataFrame, bandStore: DataFrame,
+      kernel: String): Dataset[GateRoll] =
+    bandGate(graft.operators.Multimodal.phashBandRows(docs
+        .select(col("doc_id"), lit("").as("digest"),
+          expr(s"$kernel(payload)").as("phash"))
+        .filter(col("phash").isNotNull)
+        .withColumn("hash", col("phash"))),
+      bandStore, Seq("band_id", "band_key"), col("band_id"))
 
   /** stream_ingest_phash — the ingest firewall extended to the
     * MULTIMODAL tier (batch core: operators.Multimodal.phashProbe):
     * each arriving image payload is pixel-decoded to its 64-bit dHash
     * by the graft_dhash kernel (narrow, per-row), its 4 hamming-band
     * keys probe the PERSISTED phash band store stream-static, and the
-    * per-doc roll-up runs in the same zero-state
-    * flatMapGroupsWithState shape as ingestMinhashGate. A re-encoded
-    * or slightly-edited copy of any historical image flags on arrival
-    * (a one-pixel edit moves ≤ 2 hash bits → ≥ 2 bands intact);
-    * non-PNG payloads pass through untested (no phash row). History
-    * pixels are decoded ONCE at store build — never per micro-batch.
+    * per-doc roll-up is [[bandGate]], as in ingestMinhashGate. A
+    * re-encoded or slightly-edited copy of any historical image flags
+    * on arrival (a one-pixel edit moves ≤ 2 hash bits → ≥ 2 bands
+    * intact); non-PNG payloads pass through untested (no phash row).
+    * History pixels are decoded ONCE at store build — never per
+    * micro-batch.
     */
   def ingestPhashGate(docs: DataFrame, bandStore: DataFrame):
       Dataset[PhashGateOut] = {
     import docs.sparkSession.implicits._
-    val hashed = docs
-      .withColumn("phash", expr("graft_dhash(payload)"))
-      .filter(col("phash").isNotNull)
-    val probes = graft.operators.Multimodal.phashBandRows(hashed)
-      .join(bandStore.select(col("band_id"), col("band_key")).distinct()
-          .withColumn("hit", lit(1L)),
-        Seq("band_id", "band_key"), "left")
-      .select(col("doc_id"), col("phash"), col("band_id"),
-        coalesce(col("hit"), lit(0L)).as("hit"))
-      .as[PhashProbeRow]
-    probes.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[ZeroState, PhashGateOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (id: Long, in: Iterator[PhashProbeRow],
-            state: GroupState[ZeroState]) =>
-          val matched = new java.util.HashSet[java.lang.Long]()
-          var ph = 0L
-          in.foreach { p =>
-            ph = p.phash
-            if (p.hit == 1L) matched.add(p.band_id)
-          }
-          val n = matched.size.toLong
-          Iterator.single(PhashGateOut(id, ph, n, if (n >= 1L) 1L else 0L))
-      }
+    perceptualGate(docs, bandStore, "graft_dhash")
+      .select(col("doc_id"), col("hash").as("phash"),
+        col("n").as("n_hist_bands"), col("flag").as("near_hist"))
+      .as[PhashGateOut]
   }
 
   // ---- stream_ingest_audio: the firewall's audio tier ----
@@ -1293,9 +1305,9 @@ object Streams {
     * arriving WAV payload's PCM samples decode to the 64-bit
     * energy-envelope hash (plans.AudioHash — narrow, per-row, no
     * codec), its 4 hamming-band keys probe the persisted
-    * `ahash_bands/` store stream-static, and the per-doc roll-up runs
-    * in the same zero-state flatMapGroupsWithState shape as
-    * [[ingestPhashGate]]. A re-containered or re-GAINED copy of any
+    * `ahash_bands/` store stream-static, and the per-doc roll-up is
+    * [[bandGate]]: [[ingestPhashGate]] with graft_ahash in place of
+    * graft_dhash. A re-containered or re-GAINED copy of any
     * historical audio flags on arrival (the envelope hash is
     * gain-invariant); non-audio payloads pass through untested.
     * History samples are decoded ONCE at store build — never per
@@ -1304,36 +1316,13 @@ object Streams {
   def ingestAudioGate(docs: DataFrame, bandStore: DataFrame):
       Dataset[AudioGateOut] = {
     import docs.sparkSession.implicits._
-    val hashed = docs
-      .withColumn("phash", expr("graft_ahash(payload)"))
-      .filter(col("phash").isNotNull)
-    val probes = graft.operators.Multimodal.phashBandRows(hashed)
-      .join(bandStore.select(col("band_id"), col("band_key")).distinct()
-          .withColumn("hit", lit(1L)),
-        Seq("band_id", "band_key"), "left")
-      .select(col("doc_id"), col("phash"), col("band_id"),
-        coalesce(col("hit"), lit(0L)).as("hit"))
-      .as[PhashProbeRow]
-    probes.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[ZeroState, AudioGateOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (id: Long, in: Iterator[PhashProbeRow],
-            state: GroupState[ZeroState]) =>
-          val matched = new java.util.HashSet[java.lang.Long]()
-          var ah = 0L
-          in.foreach { p =>
-            ah = p.phash
-            if (p.hit == 1L) matched.add(p.band_id)
-          }
-          val n = matched.size.toLong
-          Iterator.single(AudioGateOut(id, ah, n, if (n >= 1L) 1L else 0L))
-      }
+    perceptualGate(docs, bandStore, "graft_ahash")
+      .select(col("doc_id"), col("hash").as("ahash"),
+        col("n").as("n_audio_bands"), col("flag").as("audio_hist"))
+      .as[AudioGateOut]
   }
 
   // ---- stream_ingest_clip: the firewall lifted to video-shaped rows ----
-
-  private[streaming] case class ClipProbeRow(doc_id: Long, slot: Long,
-    hit: Long)
 
   case class ClipGateOut(doc_id: Long, n_clip_bands: Long, clip_hist: Long)
 
@@ -1343,42 +1332,31 @@ object Streams {
     * stride-sample BEFORE decode ([[framesSampled]] — the per-clip
     * pixel cost stays |frames|/stride), each SAMPLED frame's 4
     * hamming bands probe the persisted `phash_bands/` store
-    * stream-static, and the per-clip roll-up (distinct
-    * (frame_idx, band) collisions, flag at ≥ 1) runs in the same
-    * zero-state flatMapGroupsWithState shape as [[ingestPhashGate]]
-    * — every derived row of one clip lands in the same micro-batch
-    * as the clip itself, so no watermark and no state rows. A clip sharing ≥ 1 sampled
-    * frame (exact or one-pixel-edited) with any accepted historical
-    * clip or image — one shared dHash band space — flags on arrival;
-    * clips whose sampled frames are all undecodable emit no row
-    * (pass through untested), matching the batch gate's left-join 0.
+    * stream-static, and the per-clip roll-up ([[bandGate]] over
+    * distinct (frame_idx, band) collisions, flag at ≥ 1) keeps no
+    * watermark and no state rows — every derived row of one clip lands
+    * in the same micro-batch as the clip itself. A clip sharing ≥ 1
+    * sampled frame (exact or one-pixel-edited) with any accepted
+    * historical clip or image — one shared dHash band space — flags on
+    * arrival; clips whose sampled frames are all undecodable emit no
+    * row (pass through untested), matching the batch gate's left-join
+    * 0.
     */
   def ingestClipGate(clips: DataFrame, bandStore: DataFrame):
       Dataset[ClipGateOut] = {
     import clips.sparkSession.implicits._
     val sampled = framesSampled(clips).filter(col("frame_hash").isNotNull)
-    val probes = graft.operators.Multimodal.phashBandRows(
-        sampled.select(col("doc_id"), col("frame_idx"),
-          col("frame_hash").as("phash")))
-      .join(bandStore.select(col("band_id"), col("band_key")).distinct()
-          .withColumn("hit", lit(1L)),
-        Seq("band_id", "band_key"), "left")
+    bandGate(graft.operators.Multimodal.phashBandRows(
+        sampled.select(col("doc_id"), lit("").as("digest"),
+          lit(0L).as("hash"), col("frame_idx"),
+          col("frame_hash").as("phash"))),
       // slot = the (frame_idx, band_id) pair packed to one key: the
       // batch probe's countDistinct(frame_idx, band_id), streamable
-      .select(col("doc_id"),
-        (col("frame_idx") * 4L + col("band_id")).as("slot"),
-        coalesce(col("hit"), lit(0L)).as("hit"))
-      .as[ClipProbeRow]
-    probes.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[ZeroState, ClipGateOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (id: Long, in: Iterator[ClipProbeRow],
-            state: GroupState[ZeroState]) =>
-          val matched = new java.util.HashSet[java.lang.Long]()
-          in.foreach(p => if (p.hit == 1L) matched.add(p.slot))
-          val n = matched.size.toLong
-          Iterator.single(ClipGateOut(id, n, if (n >= 1L) 1L else 0L))
-      }
+      bandStore, Seq("band_id", "band_key"),
+      col("frame_idx") * 4L + col("band_id"))
+      .select(col("doc_id"), col("n").as("n_clip_bands"),
+        col("flag").as("clip_hist"))
+      .as[ClipGateOut]
   }
 
   // ---- stream_bitext: online mining vs the persisted target index ----

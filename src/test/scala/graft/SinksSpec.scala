@@ -250,15 +250,49 @@ class SinksSpec extends SparkSpec {
     assert(rows(operators.Dedup.incrementalMinhashFrom(fresh,
         sources.Fingerprints.readBands(spark, grownPath))) == wantMh,
       "appended store diverged on the minhash gate")
+    // the perceptual tiers grow the same way: image and audio bands
+    // appended over two ticks, probed by half-historical, half-fresh
+    // payloads
+    import spark.implicits._
+    def png(i: Long) = operators.Multimodal.buildPng(32, 24,
+      operators.Multimodal.plantedLuma(i, _, _))
+    def wav(i: Long) = operators.Multimodal.buildWav(1, 8000, 16,
+      (0 until 65 * 4).flatMap { f =>
+        val v = operators.Multimodal.plantedSamp(i, f, 0)
+        Seq(v.toByte, (v >> 8).toByte)
+      }.toArray)
+    val tiers = Map("phash_bands" -> ("graft_dhash", png _),
+      "ahash_bands" -> ("graft_ahash", wav _))
+    def hashes(sub: String, ids: Seq[Long]) = {
+      val (kernel, payload) = tiers(sub)
+      ids.map(i => (i, payload(i))).toDF("doc_id", "payload")
+        .select($"doc_id", expr(s"$kernel(payload)").as("phash"))
+    }
+    for (sub <- tiers.keys; ids <- Seq(0L until 10L, 10L until 20L))
+      sources.Fingerprints.writePhashBands(hashes(sub, ids), grownPath,
+        nShards = 2, mode = "append", sub = sub)
+    def flags(sub: String) = rows(operators.Multimodal.phashProbe(
+      hashes(sub, 10L until 30L),
+      sources.Fingerprints.readPhashBands(spark, grownPath, sub)))
+    val wantFlags = tiers.keys.map(sub => sub -> flags(sub)).toMap
+    wantFlags.foreach { case (sub, f) =>
+      assert(f.map(_(3)) == Set(0L, 1L),
+        s"$sub probe must flag history and pass fresh payloads: $f")
+    }
     // COMPACTION: fold the appended files back to nShards clean ones —
     // gating identical, file count reduced (the log-structured lever)
-    val filesBefore = new java.io.File(s"$grownPath/content")
+    def parquetFiles(sub: String) = new java.io.File(s"$grownPath/$sub")
       .listFiles().count(_.getName.endsWith(".parquet"))
+    val filesBefore = (Seq("content") ++ tiers.keys)
+      .map(sub => sub -> parquetFiles(sub)).toMap
     sources.Fingerprints.compact(spark, grownPath, nShards = 2)
-    val filesAfter = new java.io.File(s"$grownPath/content")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(filesAfter == 2 && filesAfter < filesBefore,
-      s"compact must fold $filesBefore files to 2, got $filesAfter")
+    filesBefore.foreach { case (sub, before) =>
+      val after = parquetFiles(sub)
+      assert(after == 2 && after < before,
+        s"compact must fold $before $sub files to 2, got $after")
+    }
+    tiers.keys.foreach(sub => assert(flags(sub) == wantFlags(sub),
+      s"compacted store diverged on the $sub gate"))
     assert(rows(operators.Dedup.incrementalDedupFrom(fresh,
         sources.Fingerprints.readContent(spark, grownPath),
         sources.Fingerprints.readSpans(spark, grownPath))) == wantExact,
@@ -347,6 +381,14 @@ class SinksSpec extends SparkSpec {
       rows(storeFed), "appended model diverged from the one-shot build")
   }
 
+  /** The documented decision frame of sources.Ingest.gateAndRemember,
+    * in order. */
+  private val DecisionColumns = Seq("doc_id", "bloom_pass",
+    "is_exact_dup", "n_hist_bands", "near_hist", "n_img_bands",
+    "img_hist", "img_decoded", "n_audio_bands", "audio_hist",
+    "audio_decoded", "n_clip_bands", "clip_hist", "n_clip_sampled",
+    "n_clip_decoded", "accept")
+
   test("ingest_e2e: gate-then-remember — tick N+1 rejects what tick N accepted") {
     import spark.implicits._
     val all = Tables(spark, sfDir, "documents").select(col("doc_id"), col("text"))
@@ -362,6 +404,7 @@ class SinksSpec extends SparkSpec {
     val tick1 = (t1 :+ (900001L, histText)) :+ (900002L, toks.mkString(" "))
     val d1 = sources.Ingest.gateAndRemember(
       tick1.toSeq.toDF("doc_id", "text"), store)
+    assert(d1.columns.toSeq == DecisionColumns, d1.columns.mkString(","))
     val m1 = d1.collect().map(r => r.getAs[Long]("doc_id") ->
       ((r.getAs[Long]("is_exact_dup"), r.getAs[Long]("near_hist"),
         r.getAs[Long]("accept")))).toMap
@@ -563,11 +606,13 @@ class SinksSpec extends SparkSpec {
     sources.Fingerprints.write(
       Tables(spark, sfDir, "documents").select(col("doc_id"), col("text"))
         .filter(col("doc_id") < 100L), store, nShards = 2)
-    def tick(rows: Seq[(Long, String, Seq[Array[Byte]])]) =
-      sources.Ingest.gateAndRemember(
-          rows.toDF("doc_id", "text", "frames"), store)
-        .collect().map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("clip_hist"), r.getAs[Long]("accept")))).toMap
+    def tick(rows: Seq[(Long, String, Seq[Array[Byte]])]) = {
+      val d = sources.Ingest.gateAndRemember(
+        rows.toDF("doc_id", "text", "frames"), store)
+      assert(d.columns.toSeq == DecisionColumns, d.columns.mkString(","))
+      d.collect().map(r => r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("clip_hist"), r.getAs[Long]("accept")))).toMap
+    }
     val m1 = tick(Seq((920001L, "bootstrap clip document alpha", clip(8000L))))
     assert(m1(920001L) == ((0L, 1L)),
       s"first clip vs text-only store must pass: ${m1(920001L)}")
@@ -792,6 +837,32 @@ class SinksSpec extends SparkSpec {
       "recovery must restore the frame that was mid-swap")
     assert(!new java.io.File(s"$store/.content.old").exists())
     assert(!new java.io.File(s"$store/.bands.compact").exists())
+    // a perceptual frame caught the same way is history, not an empty
+    // tier: a tick refuses it (read as empty, the copy below would pass
+    // and its append would start a phash_bands/ that the next compact
+    // keeps, deleting .phash_bands.old); compact then restores it
+    import spark.implicits._
+    def png(i: Long) = operators.Multimodal.buildPng(32, 24,
+      operators.Multimodal.plantedLuma(i, _, _))
+    sources.Fingerprints.writePhashBands(Seq((1L, png(7L)))
+      .toDF("doc_id", "payload")
+      .select($"doc_id", expr("graft_dhash(payload)").as("phash")),
+      store, nShards = 2)
+    java.nio.file.Files.move(
+      new java.io.File(s"$store/phash_bands").toPath,
+      new java.io.File(s"$store/.phash_bands.old").toPath)
+    def tick() = sources.Ingest.gateAndRemember(
+      Seq((930001L, "a copy of the historical image", png(7L)))
+        .toDF("doc_id", "text", "payload"), store)
+    val refused = intercept[IllegalStateException](tick())
+    assert(refused.getMessage.contains(".phash_bands.old"), refused.getMessage)
+    assert(!new java.io.File(s"$store/phash_bands").exists() &&
+      new java.io.File(s"$store/.phash_bands.old").exists(),
+      "a refused tick must leave the moved-aside frame as it was")
+    sources.Fingerprints.compact(spark, store, nShards = 2)
+    val d = tick().collect().head
+    assert(d.getAs[Long]("img_hist") == 1L && d.getAs[Long]("accept") == 0L,
+      s"the restored frame must flag the copy: $d")
   }
 
   test("sink_graph: rank from the reloaded store == in-line; deltas append, compact folds") {

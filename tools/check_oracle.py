@@ -3,8 +3,9 @@
 # Usage: python3 tools/check_oracle.py SFDIR OUTDIR [name ...]
 # Checks each named query, or every oracle_sql.json key when no names are
 # given. Verify writes no directory for a query that throws, so a missing
-# output counts as a failure. Exits 1 if any query fails.
-import sys, os, json, glob
+# output counts as a failure. Each PASS/FAIL line ends with the seconds the
+# check took (DuckDB replay plus compare). Exits 1 if any query fails.
+import sys, os, json, glob, time
 import duckdb
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
@@ -21,10 +22,11 @@ for t in ("region nation customer supplier part orders lineitem events "
 
 fail = npass = 0
 for name in (names or sorted(oracles)):
+    t0 = time.monotonic()
     spark_dir = os.path.join(outdir, name)
     if not os.path.isdir(spark_dir):
         fail += 1
-        print(f"{name}: FAIL no output")
+        print(f"{name}: FAIL no output {time.monotonic() - t0:.1f}s")
         continue
     sql = oracles.get(name)
     if sql is None:
@@ -41,17 +43,18 @@ for name in (names or sorted(oracles)):
         a = sp[cols].astype(str).apply(lambda r: "|".join(r), axis=1)
         b = du[cols].astype(str).apply(lambda r: "|".join(r), axis=1)
         ok_hash = sorted(a) == sorted(b)
+    secs = f"{time.monotonic() - t0:.1f}s"
     status = "PASS" if (ok_rows and ok_schema and ok_hash) else "FAIL"
     if status == "FAIL":
         fail += 1
         print(f"{name}: {status} rows={len(sp)}/{len(du)} "
-              f"schema={ok_schema} hash={ok_hash}")
+              f"schema={ok_schema} hash={ok_hash} {secs}")
         if ok_rows and ok_schema:
             diff = set(a) ^ set(b)
             for d in list(diff)[:4]:
                 print("   ", d)
     else:
         npass += 1
-        print(f"{name}: PASS ({len(sp)} rows)")
+        print(f"{name}: PASS ({len(sp)} rows) {secs}")
 print(f"{npass} pass, {fail} fail")
 sys.exit(1 if fail else 0)
