@@ -438,9 +438,11 @@ object Multimodal {
     * per-doc dims), and the banded/salted near-dup search is plain
     * relational algebra: 4×16-bit band keys via arithmetic-shift+mask
     * (identical bit semantics both engines, verified incl. the sign
-    * bit), bucket populations, the adaptive sub-split's salt rule,
-    * the same-band same-salt self-join, bit_count(xor) hamming, the
-    * ≤ [[PhashMaxHamming]] verify, and the per-doc roll-up. Proves
+    * bit), bucket populations counted over DISTINCT hashes (the hash
+    * nodes [[Dedup.neighborStats]] bands, not doc rows), the adaptive
+    * sub-split's salt rule, the same-band same-salt self-join,
+    * bit_count(xor) hamming, the ≤ [[PhashMaxHamming]] verify, and
+    * the per-doc roll-up. Proves
     * decode + hash + candidate machinery end-to-end against an
     * independent engine, not just the kernel.
     */
@@ -462,7 +464,7 @@ object Multimodal {
           (phash >> CAST(bi.band_id * 16 AS INTEGER)) & 65535 AS band_key
         FROM ph CROSS JOIN (SELECT unnest(range(4)) AS band_id) bi
       ), sized AS (
-        SELECT band_id, band_key, COUNT(*) AS bn
+        SELECT band_id, band_key, COUNT(DISTINCT phash) AS bn
         FROM bands GROUP BY band_id, band_key
       ), salted AS (
         SELECT b.doc_id, b.phash, b.band_id, b.band_key,
@@ -958,7 +960,7 @@ object Multimodal {
           (ahash >> CAST(bi.band_id * 16 AS INTEGER)) & 65535 AS band_key
         FROM ah CROSS JOIN (SELECT unnest(range(4)) AS band_id) bi
       ), sized AS (
-        SELECT band_id, band_key, COUNT(*) AS bn
+        SELECT band_id, band_key, COUNT(DISTINCT ahash) AS bn
         FROM bands GROUP BY band_id, band_key
       ), salted AS (
         SELECT b.doc_id, b.ahash, b.band_id, b.band_key,

@@ -38,26 +38,23 @@ object AnnIndex {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "ANN index", "int8 max-abs codes + flat subspace-major PQ codebook")
+  private val bundle = StoreMaintenance.Bundle("ANN index", FormatVersion,
+    "int8 max-abs codes + flat subspace-major PQ codebook")
 
   def write(e: DataFrame, path: String, nShards: Int = 4): Unit = {
     val spark = e.sparkSession
-    Similarity.int8Codes(e)
-      .repartitionByRange(nShards, col("c_id"))
-      .sortWithinPartitions(col("c_id"))
-      .write.mode("overwrite").parquet(s"$path/codes")
     val k = Similarity.ivfK(e.count())
     val cents = Similarity.kmeansCentroids(e, k, Similarity.KmeansIters)
-    spark.createDataFrame(cents.toSeq).toDF("cent_id", "cent_emb")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     val (cb, kEff) = Similarity.pqCodebook(
       e, Similarity.PqM, Similarity.PqK, Similarity.KmeansIters)
-    spark.createDataFrame(Seq((Similarity.PqM, kEff, cb.toSeq)))
-      .toDF("m", "k", "codebook")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pq")
-    StoreMaintenance.markFormat(spark, path, FormatVersion)
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("codes", Similarity.int8Codes(e),
+        Seq("c_id"), nShards),
+      StoreMaintenance.Frame("centroids",
+        spark.createDataFrame(cents.toSeq).toDF("cent_id", "cent_emb")),
+      StoreMaintenance.Frame("pq",
+        spark.createDataFrame(Seq((Similarity.PqM, kEff, cb.toSeq)))
+          .toDF("m", "k", "codebook")))
   }
 
   // ---- ann_upsert: incremental index maintenance ----
@@ -110,10 +107,7 @@ object AnnIndex {
     * are never rewritten (append-only, the log-structured move).
     */
   def upsert(newVecs: DataFrame, path: String, nShards: Int = 1): Unit =
-    upsertFrame(newVecs, path)
-      .repartitionByRange(nShards, col("c_id"))
-      .sortWithinPartitions(col("c_id"))
-      .write.mode("append").parquet(s"$path/upserts")
+    writeUpserts(newVecs, path, "upserts", nShards, "append")
 
   /** IDEMPOTENT upsert keyed by a caller-supplied batch id: the delta
     * lands under `upserts/bid=<id>/` with OVERWRITE semantics, so a
@@ -125,37 +119,34 @@ object AnnIndex {
     */
   def upsertBatch(newVecs: DataFrame, path: String, batchId: Long,
       nShards: Int = 1): Unit =
-    upsertFrame(newVecs, path)
-      .repartitionByRange(nShards, col("c_id"))
-      .sortWithinPartitions(col("c_id"))
-      .write.mode("overwrite").parquet(s"$path/upserts/bid=$batchId")
+    writeUpserts(newVecs, path, s"upserts/bid=$batchId", nShards, "overwrite")
+
+  private def writeUpserts(newVecs: DataFrame, path: String, sub: String,
+      nShards: Int, mode: String): Unit =
+    bundle.write(path, mode)(StoreMaintenance.Frame(
+      sub, upsertFrame(newVecs, path), Seq("c_id"), nShards))
 
   /** The full servable int8 code set: base build ∪ upserted deltas
     * (absent `upserts/` — a never-upserted bundle — just the base).
     */
   def readServable(spark: SparkSession, path: String): DataFrame = {
-    val up = new org.apache.hadoop.fs.Path(s"$path/upserts")
-    val fs = up.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = readCodes(spark, path)
-    if (fs.exists(up))
-      base.union(spark.read.parquet(up.toString).select(col("c_id"), col("c_q")))
+    if (StoreMaintenance.exists(spark,
+        new org.apache.hadoop.fs.Path(s"$path/upserts")))
+      base.union(bundle.read(spark, path, "upserts")
+        .select(col("c_id"), col("c_q")))
     else base
   }
 
-  def readCodes(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/codes")
-  }
+  def readCodes(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "codes")
 
-  def readCentroids(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/centroids")
-  }
+  def readCentroids(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "centroids")
 
   /** (flat codebook, m, k) — the graft_pq_cos/graft_pq_encode args. */
   def readPq(spark: SparkSession, path: String): (Array[Float], Int, Int) = {
-    checkFormat(spark, path)
-    val r = spark.read.parquet(s"$path/pq").head()
+    val r = bundle.read(spark, path, "pq").head()
     (r.getSeq[Float](2).toArray, r.getInt(0), r.getInt(1))
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.{Search, Similarity, Splits}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sink_benchmark — persistence for the FIXED-benchmark side of the
@@ -56,33 +56,25 @@ object BenchmarkStore {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "benchmark", "signature/quantization/tokenizer of the persisted benchmark")
+  private val bundle = StoreMaintenance.Bundle("benchmark", FormatVersion,
+    "signature/quantization/tokenizer of the persisted benchmark")
 
   // ---- bands: fuzzy decontamination benchmark ----
 
   /** Persist the benchmark docs' distinct band set — the vanishing
     * (corpus_bench × 8 minus collisions) frame contam_minhash probes. */
-  def writeBands(bench: DataFrame, path: String, nShards: Int = 2): Unit = {
-    Splits.bandRows(bench)
-      .select(col("band_val")).distinct()
-      .repartitionByRange(nShards, col("band_val"))
-      .sortWithinPartitions(col("band_val"))
-      .write.mode("overwrite").parquet(s"$path/bands")
-    StoreMaintenance.markFormat(bench.sparkSession, path, FormatVersion)
-  }
+  def writeBands(bench: DataFrame, path: String, nShards: Int = 2): Unit =
+    bundle.write(path, "overwrite")(StoreMaintenance.Frame("bands",
+      Splits.bandRows(bench).select(col("band_val")).distinct(),
+      Seq("band_val"), nShards))
 
   /** Store-fed contam_minhash: flag `pool` docs whose bands collide
     * with the PERSISTED benchmark band set — the corpus text is
     * hashed once, the benchmark is never re-derived, and the op is
     * linear in pool rows at any corpus size. */
-  def contamMinhashFrom(pool: DataFrame, path: String): DataFrame = {
-    checkFormat(pool.sparkSession, path)
-    Splits.contamMinhashProbe(
-      Splits.bandRows(pool),
-      pool.sparkSession.read.parquet(s"$path/bands"))
-  }
+  def contamMinhashFrom(pool: DataFrame, path: String): DataFrame =
+    Splits.contamMinhashProbe(Splits.bandRows(pool),
+      bundle.read(pool.sparkSession, path, "bands"))
 
   // ---- codes: semantic decontamination benchmark ----
 
@@ -90,43 +82,34 @@ object BenchmarkStore {
     * [[graft.streaming.Streams.AnnIndexCap]] — checked at READ time
     * by the shared bounded-collect guard; a benchmark suite is
     * bounded by nature, ~10⁴ rows). */
-  def writeCodes(benchEmbs: DataFrame, path: String): Unit = {
-    Similarity.int8Codes(benchEmbs)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    StoreMaintenance.markFormat(benchEmbs.sparkSession, path, FormatVersion)
-  }
+  def writeCodes(benchEmbs: DataFrame, path: String): Unit =
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("codes", Similarity.int8Codes(benchEmbs)))
 
   /** Store-fed contam_embed: ONE narrow pool scan against the
     * reloaded benchmark code index (the stream_ann serving kernel) —
     * pool embeddings in, contamination flags out, linear in pool
     * rows. The count-before-collect guard fires on an oversized
     * store before any row reaches the driver. */
-  def contamEmbedFrom(pool: DataFrame, path: String): DataFrame = {
-    checkFormat(pool.sparkSession, path)
+  def contamEmbedFrom(pool: DataFrame, path: String): DataFrame =
     Splits.contamEmbedServe(pool,
-      Splits.boundedEvalCodes(
-        pool.sparkSession.read.parquet(s"$path/codes")))
-  }
+      Splits.boundedEvalCodes(bundle.read(pool.sparkSession, path, "codes")))
 
   // ---- qterms: fixed mining query set ----
 
   /** Derive AND persist the rarest-first query-term table from the
     * corpus snapshot ([[Search.deriveQueryTerms]] — the offline
     * once-per-benchmark half of mine_hardneg). */
-  def writeQueryTerms(corpus: DataFrame, path: String): Unit = {
-    Search.deriveQueryTerms(corpus)
-      .write.mode("overwrite").parquet(s"$path/qterms")
-    StoreMaintenance.markFormat(corpus.sparkSession, path, FormatVersion)
-  }
+  def writeQueryTerms(corpus: DataFrame, path: String): Unit =
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("qterms", Search.deriveQueryTerms(corpus)))
 
   /** Store-fed mine_hardneg: score `corpus` against the PERSISTED
     * query-term table — one term-filtered corpus pass + skinny
     * fan-out ([[Search.hardNegativesWith]], the same scoring kernel
     * as inline), linear in corpus rows because the query side no
     * longer grows with it. */
-  def hardNegativesFrom(corpus: DataFrame, path: String): DataFrame = {
-    checkFormat(corpus.sparkSession, path)
+  def hardNegativesFrom(corpus: DataFrame, path: String): DataFrame =
     Search.hardNegativesWith(corpus,
-      corpus.sparkSession.read.parquet(s"$path/qterms"))
-  }
+      bundle.read(corpus.sparkSession, path, "qterms"))
 }

@@ -41,45 +41,33 @@ object BitextIndex {
     */
   val FormatVersion = 2
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "bitext", "mineBandRows sign-projection banding + bwdPool stats")
+  private val bundle = StoreMaintenance.Bundle("bitext", FormatVersion,
+    "mineBandRows sign-projection banding + bwdPool stats")
 
   def write(src: DataFrame, tgt: DataFrame, path: String, bits: Int,
-      nShards: Int = 2): Unit = {
-    graft.operators.Similarity.mineBandRows(tgt, "t_id", bits)
-      .repartitionByRange(nShards, col("j"), col("band_key"))
-      .sortWithinPartitions(col("j"), col("band_key"))
-      .write.mode("overwrite").parquet(s"$path/bands")
-    tgt.select(col("vec_id").as("t_id"), col("embedding"))
-      .repartitionByRange(nShards, col("t_id"))
-      .write.mode("overwrite").parquet(s"$path/vecs")
-    graft.operators.Similarity.bwdPool(
-        graft.operators.Similarity.mineScored(src, tgt, bits))
-      .repartitionByRange(nShards, col("t_id"))
-      .write.mode("overwrite").parquet(s"$path/stats")
-    src.sparkSession.range(1).select(lit(bits).as("bits"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    StoreMaintenance.markFormat(src.sparkSession, path, FormatVersion)
-  }
+      nShards: Int = 2): Unit =
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("bands",
+        graft.operators.Similarity.mineBandRows(tgt, "t_id", bits),
+        Seq("j", "band_key"), nShards),
+      StoreMaintenance.Frame("vecs",
+        tgt.select(col("vec_id").as("t_id"), col("embedding")),
+        Seq("t_id"), nShards),
+      StoreMaintenance.Frame("stats", graft.operators.Similarity.bwdPool(
+          graft.operators.Similarity.mineScored(src, tgt, bits)),
+        Seq("t_id"), nShards),
+      StoreMaintenance.Frame("meta",
+        src.sparkSession.range(1).select(lit(bits).as("bits"))))
 
-  def readBands(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/bands")
-  }
+  def readBands(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "bands")
 
-  def readVecs(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/vecs")
-  }
+  def readVecs(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "vecs")
 
-  def readStats(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/stats")
-  }
+  def readStats(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "stats")
 
-  def readBits(spark: SparkSession, path: String): Int = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/meta").head().getInt(0)
-  }
+  def readBits(spark: SparkSession, path: String): Int =
+    bundle.read(spark, path, "meta").head().getInt(0)
 }

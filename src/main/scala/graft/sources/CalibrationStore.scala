@@ -35,22 +35,18 @@ object CalibrationStore {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "calibration", "KLL(k=200) sketches over the lexical-diversity " +
-        "score in integer ppm, whitespace tokens")
+  private val bundle = StoreMaintenance.Bundle("calibration", FormatVersion,
+    "KLL(k=200) sketches over the lexical-diversity score in integer " +
+      "ppm, whitespace tokens")
 
   /** Persist the (source, sk, n) model frame. */
-  def write(model: DataFrame, path: String): Unit = {
-    model.coalesce(1).write.mode("overwrite").parquet(s"$path/sketches")
-    StoreMaintenance.markFormat(model.sparkSession, path, FormatVersion)
-  }
+  def write(model: DataFrame, path: String): Unit =
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("sketches", model))
 
   /** Reload the frozen model frame. Refuses a stale-format bundle. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/sketches")
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "sketches")
 
   /** Fold a new shard's per-source sketches into the standing bundle
     * (KLL merge — additive, history never re-read): rewrites the
@@ -58,20 +54,19 @@ object CalibrationStore {
     * stale-format bundle before touching it. */
   def append(newModel: DataFrame, path: String): Unit = {
     val spark = newModel.sparkSession
-    checkFormat(spark, path)
     import org.apache.spark.sql.functions._
     // BOUNDED collect: one (sketch, count) row per source — and it must
     // materialize BEFORE the overwrite below, or the write would clobber
     // the very files the lazy read still needs (the self-overwrite trap)
-    val merged = read(spark, path).unionByName(newModel)
+    val standing = read(spark, path)
+    val merged = standing.unionByName(newModel)
       .groupBy(col("source"))
       .agg(
         expr(s"graft_kll_merge(sk, ${graft.operators.Calibrate.SketchK})")
           .as("sk"),
         sum(col("n")).as("n"))
       .collect()
-    val schema = read(spark, path).schema
-    spark.createDataFrame(java.util.Arrays.asList(merged: _*), schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sketches")
+    write(spark.createDataFrame(java.util.Arrays.asList(merged: _*),
+      standing.schema), path)
   }
 }

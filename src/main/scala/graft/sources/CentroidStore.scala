@@ -33,10 +33,9 @@ object CentroidStore {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "centroids", "float32 cosine centroids (smaller-id ties) + " +
-        "4096-bin ccos prune fences")
+  private val bundle = StoreMaintenance.Bundle("centroids", FormatVersion,
+    "float32 cosine centroids (smaller-id ties) + 4096-bin ccos prune " +
+      "fences")
 
   private val centSchema = StructType(Seq(
     StructField("cent_id", IntegerType, nullable = false),
@@ -51,29 +50,26 @@ object CentroidStore {
     require(cents.nonEmpty, "centroid bundle must hold >= 1 centroid")
     val cRows: java.util.List[Row] = java.util.Arrays.asList(
       cents.map { case (id, emb) => Row(id, emb.toSeq) }: _*)
-    spark.createDataFrame(cRows, centSchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     val tRows: java.util.List[Row] = java.util.Arrays.asList(
       thresholds.toSeq.sortBy(_._1).map { case (c, b) => Row(c, b) }: _*)
-    spark.createDataFrame(tRows, thrSchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/thresholds")
-    StoreMaintenance.markFormat(spark, path, FormatVersion)
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("centroids",
+        spark.createDataFrame(cRows, centSchema)),
+      StoreMaintenance.Frame("thresholds",
+        spark.createDataFrame(tRows, thrSchema)))
   }
 
   /** Reload the frozen centroids. Refuses a stale-format bundle. */
   def readCentroids(spark: SparkSession,
       path: String): Array[(Int, Array[Float])] = {
-    checkFormat(spark, path)
-    val rows = spark.read.parquet(s"$path/centroids").collect()
+    val rows = bundle.read(spark, path, "centroids").collect()
     require(rows.nonEmpty, s"centroid bundle at $path is empty")
     rows.map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
   }
 
   /** Reload the frozen prune fences (possibly empty — see class doc). */
-  def readThresholds(spark: SparkSession, path: String): Map[Long, Long] = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/thresholds").collect()
+  def readThresholds(spark: SparkSession, path: String): Map[Long, Long] =
+    bundle.read(spark, path, "thresholds").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
 }

@@ -32,10 +32,8 @@ object ClassifierStore {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "classifier", "murmur3-mod-1024 hashed-count features over " +
-        "whitespace tokens")
+  private val bundle = StoreMaintenance.Bundle("classifier", FormatVersion,
+    "murmur3-mod-1024 hashed-count features over whitespace tokens")
 
   private val schema = StructType(Seq(
     StructField("weights", ArrayType(DoubleType, containsNull = false)),
@@ -45,18 +43,15 @@ object ClassifierStore {
   def write(spark: SparkSession, m: QualityClassifier.Model,
       path: String): Unit = {
     val row = Row(m.weights.toSeq, m.intercept, m.weights.length)
-    spark.createDataFrame(
-        java.util.List.of(row), schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
-    StoreMaintenance.markFormat(spark, path, FormatVersion)
+    bundle.write(path, "overwrite")(StoreMaintenance.Frame("model",
+      spark.createDataFrame(java.util.List.of(row), schema)))
   }
 
   /** Reload the frozen model. Refuses a stale-format bundle; also
     * refuses a dim that disagrees with the serving hash width (same
     * silent-garbage class, second line of defense inside v1). */
   def read(spark: SparkSession, path: String): QualityClassifier.Model = {
-    checkFormat(spark, path)
-    val r = spark.read.parquet(s"$path/model").collect()
+    val r = bundle.read(spark, path, "model").collect()
     require(r.length == 1, s"classifier bundle at $path holds " +
       s"${r.length} model rows, expected exactly 1")
     val dim = r(0).getInt(2)

@@ -39,18 +39,14 @@ object DsirStore {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "DSIR", "tokenization/scale of the persisted counts")
+  private val bundle = StoreMaintenance.Bundle("DSIR", FormatVersion,
+    "tokenization/scale of the persisted counts")
 
   private def writeFrames(all: DataFrame, path: String, nShards: Int,
-      mode: String): Unit = {
-    graft.operators.Dsir.vocabCounts(graft.operators.Dsir.tokenized(all))
-      .repartitionByRange(nShards, col("tok"))
-      .sortWithinPartitions(col("tok"))
-      .write.mode(mode).parquet(s"$path/vocab")
-    StoreMaintenance.markFormat(all.sparkSession, path, FormatVersion)
-  }
+      mode: String): Unit =
+    bundle.write(path, mode)(StoreMaintenance.Frame("vocab",
+      graft.operators.Dsir.vocabCounts(graft.operators.Dsir.tokenized(all)),
+      Seq("tok"), nShards))
 
   def write(all: DataFrame, path: String, nShards: Int = 2): Unit = {
     writeFrames(all, path, nShards, "overwrite")
@@ -62,10 +58,8 @@ object DsirStore {
     * via [[refreshCut]]. Refuses an old-format bundle — appending
     * new-tokenizer counts onto old-tokenizer history would mix
     * incomparable keys in one fold. */
-  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit = {
-    checkFormat(shard.sparkSession, path)
+  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit =
     writeFrames(shard, path, nShards, "append")
-  }
 
   /** Recompute the selection cut from the current corpus — the
     * non-additive half of the bundle (KLL sketch derivation, the
@@ -81,28 +75,22 @@ object DsirStore {
     * fresh cut next to incomparable vocab history must fail loudly);
     * a bundle that does not exist yet passes the check but fails the
     * vocab read — build it with [[write]] first. */
-  def refreshCut(all: DataFrame, path: String): Unit = {
-    checkFormat(all.sparkSession, path)
-    graft.operators.Dsir.sketchCut(weightsFrom(all, path))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/cut")
-  }
+  def refreshCut(all: DataFrame, path: String): Unit =
+    bundle.write(path, "overwrite")(StoreMaintenance.Frame(
+      "cut", graft.operators.Dsir.sketchCut(weightsFrom(all, path))))
 
   /** Folded per-token counts — append-safe. */
-  def readVocab(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/vocab")
+  def readVocab(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "vocab")
       .groupBy(col("tok"))
       .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-  }
 
   /** 1-row totals (nt, nr, v) folded from the vocab shards. */
   def readTotals(spark: SparkSession, path: String): DataFrame =
     graft.operators.Dsir.totals(readVocab(spark, path))
 
-  def readCut(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/cut")
-  }
+  def readCut(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "cut")
 
   /** Batch store-fed weighting: docs × the RELOADED bundle, per-doc
     * (doc_id, n_toks, llr_bits) identical to inline derivation when

@@ -82,33 +82,26 @@ object Fingerprints {
     "phash_bands" -> PerceptualBandsSchema,
     "ahash_bands" -> PerceptualBandsSchema)
 
-  /** Distinct rows, range-sharded into `nShards` and sorted within
-    * each shard on every column. */
-  private def rangeShard(df: DataFrame, nShards: Int): DataFrame = {
-    val keys = df.columns.toSeq.map(col)
-    df.distinct().repartitionByRange(nShards, keys: _*)
-      .sortWithinPartitions(keys: _*)
-  }
-
   /** Missing marker on a non-empty store ⇒ built before versioning ⇒
-    * signatures may predate the raw-byte minhash change ⇒ rebuild.
-    * Shared [[StoreMaintenance.checkFormat]] semantics: a store root
-    * that does not exist at all passes (nothing is historical yet —
-    * the readPhashBandsOrEmpty bootstrap path). */
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "fingerprint", "raw-byte minhash signatures")
+    * signatures may predate the raw-byte minhash change ⇒ rebuild. A
+    * store root that does not exist at all passes (nothing is
+    * historical yet — the readPhashBandsOrEmpty bootstrap path). */
+  private val bundle = StoreMaintenance.Bundle("fingerprint",
+    FormatVersion, "raw-byte minhash signatures")
+
+  /** Distinct rows of `df` as frame `sub`, range-sharded into
+    * `nShards` and sorted within each shard on every column. */
+  private def frame(sub: String, df: DataFrame,
+      nShards: Int): StoreMaintenance.Frame =
+    StoreMaintenance.Frame(sub, df.distinct(), df.columns.toSeq, nShards)
 
   private def writeFrames(docs: DataFrame, path: String, nShards: Int,
-      mode: String): Unit = {
-    def shard(df: DataFrame, sub: String): Unit =
-      rangeShard(df, nShards).write.mode(mode).parquet(s"$path/$sub")
-    shard(docs.select(md5(col("text")).as("th")), "content")
-    shard(Dedup.minhashSigs(docs)
-      .select(explode(col("bands")).as("band_val")), "bands")
-    shard(Dedup.spanHashes(docs).select(col("h")), "spans")
-    StoreMaintenance.markFormat(docs.sparkSession, path, FormatVersion)
-  }
+      mode: String): Unit =
+    bundle.write(path, mode)(
+      frame("content", docs.select(md5(col("text")).as("th")), nShards),
+      frame("bands", Dedup.minhashSigs(docs)
+        .select(explode(col("bands")).as("band_val")), nShards),
+      frame("spans", Dedup.spanHashes(docs).select(col("h")), nShards))
 
   def write(hist: DataFrame, path: String, nShards: Int = 4): Unit =
     writeFrames(hist, path, nShards, "overwrite")
@@ -121,15 +114,12 @@ object Fingerprints {
     * every store consumer reduces its probe side to DISTINCT before
     * joining (spec'd), so append needs no read-modify-write of
     * history — at 100 TB a dedup-on-write would re-pay the store
-    * scan per ingest tick for no semantic gain. A frame that a
-    * compaction has moved aside is refused ([[isLive]]).
+    * scan per ingest tick for no semantic gain. A stale-format store
+    * or a frame that a compaction has moved aside is refused
+    * ([[StoreMaintenance.Bundle.write]]).
     */
-  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit = {
-    val s = shard.sparkSession
-    checkFormat(s, path)
-    Seq("content", "bands", "spans").foreach(isLive(s, path, _))
+  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit =
     writeFrames(shard, path, nShards, "append")
-  }
 
   /** Log-structured COMPACTION — the other half of the append story:
     * many ingest ticks leave many small shard files (and cross-shard
@@ -148,15 +138,8 @@ object Fingerprints {
     */
   def compact(spark: SparkSession, path: String, nShards: Int = 4): Unit =
     frames.foreach { case (sub, schema) =>
-      val (dir, tmp, old) = StoreMaintenance.staging(path, sub)
-      // heal a crashed previous compaction BEFORE testing liveness —
-      // a death inside the swap window leaves the frame as `.old`
-      StoreMaintenance.recover(spark, dir, tmp, old)
-      if (StoreMaintenance.exists(spark, dir)) {
-        rangeShard(spark.read.schema(schema).parquet(dir.toString), nShards)
-          .write.mode("overwrite").parquet(tmp.toString)
-        StoreMaintenance.swap(spark, dir, tmp, old)
-      }
+      bundle.compact(spark, path, sub, schema.fieldNames.toSeq, nShards,
+        Some(schema))(_.distinct())
     }
 
   /** Multimodal extension of the store: distinct 16-bit hamming-band
@@ -167,16 +150,14 @@ object Fingerprints {
     * exactly once, here.
     */
   def writePhashBands(hashes: DataFrame, path: String, nShards: Int = 1,
-      mode: String = "overwrite", sub: String = "phash_bands"): Unit = {
-    if (mode == "append") isLive(hashes.sparkSession, path, sub)
-    rangeShard(graft.operators.Multimodal.phashBandRows(hashes)
-        .select(col("band_id"), col("band_key")), nShards)
-      .write.mode(mode).parquet(s"$path/$sub")
-  }
+      mode: String = "overwrite", sub: String = "phash_bands"): Unit =
+    bundle.write(path, mode)(frame(sub,
+      graft.operators.Multimodal.phashBandRows(hashes)
+        .select(col("band_id"), col("band_key")), nShards))
 
   def readPhashBands(spark: SparkSession, path: String,
       sub: String = "phash_bands"): DataFrame =
-    spark.read.schema(PerceptualBandsSchema).parquet(s"$path/$sub")
+    bundle.read(spark, path, sub, Some(PerceptualBandsSchema))
 
   /** [[readPhashBands]], tolerating a store with no perceptual tier
     * yet: a text-history store (write() builds content/bands/spans
@@ -186,45 +167,22 @@ object Fingerprints {
     * accepted-band append. The existence probe is one driver-side
     * filesystem call against the store root — the same class of
     * bounded driver lookup as the counted broadcast guards. A frame
-    * that a compaction has moved aside is refused ([[isLive]]), not
-    * read as empty.
+    * that a compaction has moved aside is refused
+    * ([[StoreMaintenance.Bundle.isLive]]), not read as empty.
     */
   def readPhashBandsOrEmpty(spark: SparkSession, path: String,
       sub: String = "phash_bands"): DataFrame =
-    if (isLive(spark, path, sub)) readPhashBands(spark, path, sub)
+    if (bundle.isLive(spark, path, sub)) readPhashBands(spark, path, sub)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       PerceptualBandsSchema)
 
-  /** Whether frame `sub` exists. Refuses one that a compaction has
-    * moved aside (live dir gone, `.sub.old` present: [[compact]] is
-    * inside its swap window or died there): read as an absent tier,
-    * its history would pass duplicates as new, and an append would
-    * start a fresh frame that the next compact's recovery keeps in
-    * place of `.old`. The next [[compact]] restores the frame. */
-  private def isLive(spark: SparkSession, path: String,
-      sub: String): Boolean = {
-    val (dir, _, old) = StoreMaintenance.staging(path, sub)
-    val live = StoreMaintenance.exists(spark, dir)
-    if (!live && StoreMaintenance.exists(spark, old))
-      throw new IllegalStateException(s"fingerprint store $path: $sub/ " +
-        s"is missing and .$sub.old holds its history (a compaction is " +
-        "mid-swap or died there); run Fingerprints.compact to restore it")
-    live
-  }
-
   def readContent(spark: SparkSession, path: String): DataFrame =
-    readText(spark, path, "content", ContentSchema)
+    bundle.read(spark, path, "content", Some(ContentSchema))
 
   def readBands(spark: SparkSession, path: String): DataFrame =
-    readText(spark, path, "bands", BandsSchema)
+    bundle.read(spark, path, "bands", Some(BandsSchema))
 
   def readSpans(spark: SparkSession, path: String): DataFrame =
-    readText(spark, path, "spans", SpansSchema)
-
-  private def readText(spark: SparkSession, path: String, sub: String,
-      schema: StructType): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.schema(schema).parquet(s"$path/$sub")
-  }
+    bundle.read(spark, path, "spans", Some(SpansSchema))
 }

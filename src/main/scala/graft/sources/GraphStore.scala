@@ -34,50 +34,41 @@ object GraphStore {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "graph", "additive session-window transition edges")
+  private val bundle = StoreMaintenance.Bundle("graph", FormatVersion,
+    "additive session-window transition edges")
 
-  def write(edges: DataFrame, path: String, nShards: Int = 2): Unit = {
-    edges.select(col("src"), col("dst"), col("w"))
-      .repartitionByRange(nShards, col("src"), col("dst"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .write.mode("overwrite").parquet(s"$path/edges")
-    StoreMaintenance.markFormat(edges.sparkSession, path, FormatVersion)
-  }
+  private val keys = Seq("src", "dst")
+
+  private def writeEdges(edges: DataFrame, path: String, nShards: Int,
+      mode: String): Unit =
+    bundle.write(path, mode)(StoreMaintenance.Frame(
+      "edges", edges.select(col("src"), col("dst"), col("w")), keys, nShards))
+
+  def write(edges: DataFrame, path: String, nShards: Int = 2): Unit =
+    writeEdges(edges, path, nShards, "overwrite")
 
   /** Append a delta edge frame (src, dst, w) — counts additive,
     * history untouched; readers fold. stream_graph's CardDelta-style
     * (src, dst, w_delta) output appends here after a rename. Refuses
-    * an old-format bundle (mixed edge semantics under one sum). */
-  def append(delta: DataFrame, path: String, nShards: Int = 1): Unit = {
-    checkFormat(delta.sparkSession, path)
-    delta.select(col("src"), col("dst"), col("w"))
-      .repartitionByRange(nShards, col("src"), col("dst"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .write.mode("append").parquet(s"$path/edges")
-    StoreMaintenance.markFormat(delta.sparkSession, path, FormatVersion)
-  }
+    * an old-format bundle (mixed edge semantics under one sum) and an
+    * `edges/` that a compaction moved aside (the delta would start a
+    * fresh frame without its history). */
+  def append(delta: DataFrame, path: String, nShards: Int = 1): Unit =
+    writeEdges(delta, path, nShards, "append")
+
+  /** Per-(src, dst) weight sums — equal rows are additive, kept. */
+  private def fold(edges: DataFrame): DataFrame =
+    edges.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
 
   /** Folded per-(src, dst) weights — append-safe. */
-  def readEdges(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/edges")
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-  }
+  def readEdges(spark: SparkSession, path: String): DataFrame =
+    fold(bundle.read(spark, path, "edges"))
 
   /** Fold the accumulated append files to nShards clean ones (weights
     * summed); gating/rank results identical before and after.
     * Crash-safe through the shared StoreMaintenance staging. */
-  def compact(spark: SparkSession, path: String, nShards: Int = 2): Unit = {
-    val (dir, tmp, old) = StoreMaintenance.staging(path, "edges")
-    StoreMaintenance.recover(spark, dir, tmp, old)
-    readEdges(spark, path)
-      .repartitionByRange(nShards, col("src"), col("dst"))
-      .sortWithinPartitions(col("src"), col("dst"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    StoreMaintenance.swap(spark, dir, tmp, old)
-  }
+  def compact(spark: SparkSession, path: String, nShards: Int = 2): Unit =
+    bundle.compact(spark, path, "edges", keys, nShards)(fold)
 
   /** PageRank over the RELOADED store — the rank sweeps never touch
     * the event log (equal to the in-line op when the store holds the

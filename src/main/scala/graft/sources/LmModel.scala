@@ -51,27 +51,22 @@ object LmModel {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "LM", "refShifted tokenization of the persisted counts")
+  private val bundle = StoreMaintenance.Bundle("LM", FormatVersion,
+    "refShifted tokenization of the persisted counts")
 
   private def writeFrames(all: DataFrame, path: String, nShards: Int,
       mode: String): Unit = {
     val zt = graft.operators.LangModel.refShifted(all)
-    zt.filter(col("w2").isNotNull)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .repartitionByRange(nShards, col("w1"), col("w2"))
-      .sortWithinPartitions(col("w1"), col("w2"))
-      .write.mode(mode).parquet(s"$path/bigrams")
-    zt.filter(col("w2").isNotNull)
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-      .repartitionByRange(nShards, col("w1"))
-      .sortWithinPartitions(col("w1"))
-      .write.mode(mode).parquet(s"$path/contexts")
-    zt.select(col("w1")).distinct()
-      .repartitionByRange(nShards, col("w1"))
-      .write.mode(mode).parquet(s"$path/vocab")
-    StoreMaintenance.markFormat(all.sparkSession, path, FormatVersion)
+    val pairs = zt.filter(col("w2").isNotNull)
+    bundle.write(path, mode)(
+      StoreMaintenance.Frame("bigrams",
+        pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
+        Seq("w1", "w2"), nShards),
+      StoreMaintenance.Frame("contexts",
+        pairs.groupBy(col("w1")).agg(count(lit(1)).as("c1")),
+        Seq("w1"), nShards),
+      StoreMaintenance.Frame("vocab", zt.select(col("w1")).distinct(),
+        Seq("w1"), nShards))
   }
 
   def write(all: DataFrame, path: String, nShards: Int = 2): Unit = {
@@ -84,10 +79,8 @@ object LmModel {
     * your own cadence via [[refreshCuts]]. Refuses an old-format
     * bundle — appending new-tokenizer counts onto old-tokenizer
     * history would mix incomparable keys in one fold. */
-  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit = {
-    checkFormat(shard.sparkSession, path)
+  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit =
     writeFrames(shard, path, nShards, "append")
-  }
 
   /** Recompute the per-language cut values from the current corpus —
     * the non-additive half of the bundle. The DEFAULT derivation is
@@ -97,38 +90,35 @@ object LmModel {
     * through the exact window's single task, the q31-rejected shape.
     * `exact = true` keeps the window for small reference corpora
     * where bit-reproducible cuts matter more than the skew bound.
+    * Refuses a stale-format bundle: fresh cuts next to counts of
+    * another tokenization would gate against incomparable scores.
     */
   def refreshCuts(all: DataFrame, path: String,
-      exact: Boolean = false): Unit =
-    (if (exact) graft.operators.LangModel.langCuts(all)
-     else graft.operators.LangModel.langCutsSketch(all))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/cuts")
+      exact: Boolean = false): Unit = {
+    bundle.checkFormat(all.sparkSession, path)
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("cuts",
+        if (exact) graft.operators.LangModel.langCuts(all)
+        else graft.operators.LangModel.langCutsSketch(all)))
+  }
 
   /** Folded per-(w1, w2) counts — append-safe. */
-  def readBigrams(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/bigrams")
+  def readBigrams(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "bigrams")
       .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
-  }
 
   /** Folded per-context counts — append-safe. */
-  def readContexts(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/contexts")
+  def readContexts(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "contexts")
       .groupBy(col("w1")).agg(sum(col("c1")).as("c1"))
-  }
 
   /** Vocabulary size as a one-row frame — distinct across shards. */
-  def readMeta(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/vocab")
+  def readMeta(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "vocab")
       .agg(countDistinct(col("w1")).as("v"))
-  }
 
-  def readCuts(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/cuts")
-  }
+  def readCuts(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "cuts")
 
   /** Batch store-fed scoring: docs × the RELOADED bundle, per-doc
     * stats identical to in-line training (round-trip spec). */

@@ -60,9 +60,16 @@ object SearchIndex {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "search index", "TextFns.tokens tokenization + PostingCap fragments")
+  private val bundle = StoreMaintenance.Bundle("search index",
+    FormatVersion, "TextFns.tokens tokenization + PostingCap fragments")
+
+  private val tfKeys = Seq("token", "doc_id")
+  private val tokenKey = Seq("token")
+
+  /** Folded postings back in the delta schema `postings/` stores. */
+  private def asDeltas(postings: DataFrame): DataFrame =
+    postings.select(col("token"), col("n_postings").as("n_postings_delta"),
+      col("n_docs").as("n_docs_delta"), col("posting").as("posting_frag"))
 
   private def writeFrames(docs: DataFrame, path: String, nShards: Int,
       mode: String): Unit = {
@@ -73,23 +80,16 @@ object SearchIndex {
         explode(col("toks")).as("token"))
       .groupBy(col("token"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).as("tf"))
-    tf.repartitionByRange(nShards, col("token"), col("doc_id"))
-      .sortWithinPartitions(col("token"), col("doc_id"))
-      .write.mode(mode).parquet(s"$path/tf")
-    tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .repartitionByRange(nShards, col("token"))
-      .sortWithinPartitions(col("token"))
-      .write.mode(mode).parquet(s"$path/df")
-    toks.agg(count(lit(1)).as("n"),
-        sum(size(col("toks")).cast("long")).as("t"))
-      .write.mode(mode).parquet(s"$path/stats")
-    graft.operators.TextAnalysis.indexBuild(docs)
-      .select(col("token"), col("n_postings").as("n_postings_delta"),
-        col("n_docs").as("n_docs_delta"), col("posting").as("posting_frag"))
-      .repartitionByRange(nShards, col("token"))
-      .sortWithinPartitions(col("token"))
-      .write.mode(mode).parquet(s"$path/postings")
-    StoreMaintenance.markFormat(docs.sparkSession, path, FormatVersion)
+    bundle.write(path, mode)(
+      StoreMaintenance.Frame("tf", tf, tfKeys, nShards),
+      StoreMaintenance.Frame("df",
+        tf.groupBy(col("token")).agg(count(lit(1)).as("df")),
+        tokenKey, nShards),
+      StoreMaintenance.Frame("stats", toks.agg(count(lit(1)).as("n"),
+        sum(size(col("toks")).cast("long")).as("t"))),
+      StoreMaintenance.Frame("postings",
+        asDeltas(graft.operators.TextAnalysis.indexBuild(docs)),
+        tokenKey, nShards))
   }
 
   /** The expensive offline pass: index the corpus once. */
@@ -100,24 +100,21 @@ object SearchIndex {
     * (history untouched); readers fold. Contract: a document lands in
     * exactly one appended shard. Refuses an old-format bundle —
     * mixing tokenizers in one fold is the silent failure the marker
-    * exists to catch. */
-  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit = {
-    checkFormat(shard.sparkSession, path)
+    * exists to catch — and any frame a compaction moved aside. */
+  def append(shard: DataFrame, path: String, nShards: Int = 1): Unit =
     writeFrames(shard, path, nShards, "append")
-  }
 
   /** Append stream_index delta rows verbatim — the streaming twin's
     * output IS the postings/ schema, so index maintenance from a
     * stream is a plain parquet append (positional tier only; a
     * stream that must also serve BM25 appends its shard through
-    * [[append]]). */
-  def appendDeltas(frags: DataFrame, path: String): Unit = {
-    checkFormat(frags.sparkSession, path)
-    frags.select(col("token"), col("n_postings_delta"),
-        col("n_docs_delta"), col("posting_frag"))
-      .write.mode("append").parquet(s"$path/postings")
-    StoreMaintenance.markFormat(frags.sparkSession, path, FormatVersion)
-  }
+    * [[append]]). Refuses an old-format bundle and a `postings/` that
+    * a compaction moved aside. */
+  def appendDeltas(frags: DataFrame, path: String): Unit =
+    bundle.write(path, "append")(
+      StoreMaintenance.Frame("postings", frags.select(col("token"),
+        col("n_postings_delta"), col("n_docs_delta"), col("posting_frag")),
+        tokenKey))
 
   /** Shared fragment fold: sum the deltas, merge the bottom-cap
     * fragments — exactly the batch index_build (any globally
@@ -134,31 +131,27 @@ object SearchIndex {
   }
 
   /** Folded positional postings == one-shot index_build (spec). */
-  def readPostings(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    foldFrags(spark.read.parquet(s"$path/postings"))
-  }
+  def readPostings(spark: SparkSession, path: String): DataFrame =
+    foldFrags(bundle.read(spark, path, "postings"))
 
   /** Frequency postings as stored (see class doc for the dup-append
     * heal). */
-  def readTf(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/tf")
-  }
+  def readTf(spark: SparkSession, path: String): DataFrame =
+    bundle.read(spark, path, "tf")
+
+  private def foldDf(df: DataFrame): DataFrame =
+    df.groupBy(col("token")).agg(sum(col("df")).as("df"))
+
+  private def foldStats(stats: DataFrame): DataFrame =
+    stats.agg(sum(col("n")).as("n"), sum(col("t")).as("t"))
 
   /** Folded per-term doc frequencies — append-safe. */
-  def readDf(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/df")
-      .groupBy(col("token")).agg(sum(col("df")).as("df"))
-  }
+  def readDf(spark: SparkSession, path: String): DataFrame =
+    foldDf(bundle.read(spark, path, "df"))
 
   /** Folded corpus stats as a one-row frame — append-safe. */
-  def readStats(spark: SparkSession, path: String): DataFrame = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/stats")
-      .agg(sum(col("n")).as("n"), sum(col("t")).as("t"))
-  }
+  def readStats(spark: SparkSession, path: String): DataFrame =
+    foldStats(bundle.read(spark, path, "stats"))
 
   /** Store-fed BM25: rank the INDEXED corpus against an arriving
     * standing query, scanning only the skinny bundle (plan spec) —
@@ -209,28 +202,10 @@ object SearchIndex {
     * the shared [[StoreMaintenance]] staging; probe results identical
     * before and after. */
   def compact(spark: SparkSession, path: String, nShards: Int = 2): Unit = {
-    val frames: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "tf" -> (d => d.distinct()
-        .repartitionByRange(nShards, col("token"), col("doc_id"))
-        .sortWithinPartitions(col("token"), col("doc_id"))),
-      "df" -> (d => d.groupBy(col("token")).agg(sum(col("df")).as("df"))
-        .repartitionByRange(nShards, col("token"))
-        .sortWithinPartitions(col("token"))),
-      "stats" -> (d => d.agg(sum(col("n")).as("n"), sum(col("t")).as("t"))
-        .coalesce(1)),
-      "postings" -> (d => foldFrags(d)
-        .select(col("token"), col("n_postings").as("n_postings_delta"),
-          col("n_docs").as("n_docs_delta"), col("posting").as("posting_frag"))
-        .repartitionByRange(nShards, col("token"))
-        .sortWithinPartitions(col("token"))))
-    frames.foreach { case (sub, fold) =>
-      val (dir, tmp, old) = StoreMaintenance.staging(path, sub)
-      StoreMaintenance.recover(spark, dir, tmp, old)
-      if (StoreMaintenance.exists(spark, dir)) {
-        fold(spark.read.parquet(dir.toString))
-          .write.mode("overwrite").parquet(tmp.toString)
-        StoreMaintenance.swap(spark, dir, tmp, old)
-      }
-    }
+    bundle.compact(spark, path, "tf", tfKeys, nShards)(_.distinct())
+    bundle.compact(spark, path, "df", tokenKey, nShards)(foldDf)
+    bundle.compact(spark, path, "stats", Nil, 1)(foldStats)
+    bundle.compact(spark, path, "postings", tokenKey, nShards)(
+      d => asDeltas(foldFrags(d)))
   }
 }

@@ -33,10 +33,9 @@ object TokenizerStore {
     */
   val FormatVersion = 1
 
-  private def checkFormat(spark: SparkSession, path: String): Unit =
-    StoreMaintenance.checkFormat(spark, path, FormatVersion,
-      "tokenizer", "unigram-LM pieces over whitespace words, " +
-        "Sennrich </w> end-of-word marker")
+  private val bundle = StoreMaintenance.Bundle("tokenizer", FormatVersion,
+    "unigram-LM pieces over whitespace words, Sennrich </w> end-of-word " +
+      "marker")
 
   private val schema = StructType(Seq(
     StructField("rank", LongType),
@@ -49,9 +48,8 @@ object TokenizerStore {
     table.zipWithIndex.foreach { case ((p, lp), i) =>
       rows.add(Row(i + 1L, p, lp))
     }
-    spark.createDataFrame(rows, schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pieces")
-    StoreMaintenance.markFormat(spark, path, FormatVersion)
+    bundle.write(path, "overwrite")(
+      StoreMaintenance.Frame("pieces", spark.createDataFrame(rows, schema)))
   }
 
   /** Reload the frozen piece table in trained (rank) order — the
@@ -59,12 +57,10 @@ object TokenizerStore {
     * parallel plan literals, and a reordered read would still segment
     * identically but produce a different plan fingerprint run to run.
     * Refuses a stale-format bundle. */
-  def read(spark: SparkSession, path: String): Seq[(String, Double)] = {
-    checkFormat(spark, path)
-    spark.read.parquet(s"$path/pieces")
+  def read(spark: SparkSession, path: String): Seq[(String, Double)] =
+    bundle.read(spark, path, "pieces")
       .collect()
       .sortBy(_.getAs[Long]("rank"))
       .map(r => (r.getAs[String]("piece"), r.getAs[Double]("logprob")))
       .toSeq
-  }
 }

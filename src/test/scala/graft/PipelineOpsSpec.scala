@@ -330,6 +330,32 @@ class PipelineOpsSpec extends SparkSpec {
     assert(!plan.contains("Window"), "giant-bucket path must not window")
   }
 
+  test("dedup_simhash: the band salt sizes buckets on distinct hashes, not doc rows") {
+    // 100 distinct hashes sharing band 0 (low 16 bits 0xBEEF), three
+    // docs each: the bucket holds 302 doc rows but 102 hash nodes
+    val fill = (0 until 100).flatMap { k =>
+      val h = (((k.toLong * 2654435761L) & 0xFFFFFFFFFFFFL) << 16) | 0xBEEFL
+      (0 until 3).map(c => (k * 3L + c, h))
+    }
+    // a near pair sharing ONLY band 0: one bit apart in each of bands
+    // 1-3, so the next band's bits — the salt — differ
+    val sigA = (0x0F0FL << 48) | (0x3C3CL << 32) | (0x5A5AL << 16) | 0xBEEFL
+    val sigB = sigA ^ (1L << 16) ^ (1L << 32) ^ (1L << 48)
+    val sim = (fill :+ (9001L, sigA) :+ (9002L, sigB)).toDF("doc_id", "simhash")
+    val maxBucket = Dedup.SimhashMaxBucket
+    assert(sim.count() > maxBucket &&
+      sim.select("simhash").distinct().count() <= maxBucket)
+    // sized on doc rows the bucket salts and the pair never meets
+    assert(Dedup.simhashPairs(sim, maxBucket, maxHamming = 8)
+      .filter($"a" === 9001L && $"b" === 9002L).count() == 0L)
+    // neighborStats sizes on hash nodes: the bucket stays whole
+    val pair = Dedup.neighborStats(sim, maxBucket, maxHamming = 8)
+      .filter($"doc_id" >= 9001L).collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Long]("n_near_dups"), r.getAs[Long]("min_hamming"))).toMap
+    assert(pair == Map(9001L -> (1L, 3L), 9002L -> (1L, 3L)), pair)
+  }
+
   test("mix_sample: balanced source mixing is deterministic and scale-free") {
     // skewed mixture: 100 docs of src A, 10 of src B → target = 10/source
     val fixture = ((0L until 100L).map(i => (i, "A")) ++

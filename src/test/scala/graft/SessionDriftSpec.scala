@@ -3,12 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Drift guard for the one session factory and the one kernel
-  * registry: every graft session comes from [[Bench.buildSession]], and
-  * every kernel reaches it through `graft.plans.GraftExtensions`. A
-  * hand-built session or a per-call kernel registration in `src/main`
-  * fails the suite instead of drifting the benched, verified and
-  * spec'd plans apart again.
+/** Drift guard for the one session factory, the one kernel registry
+  * and the one store protocol: every graft session comes from
+  * [[Bench.buildSession]], every kernel reaches it through
+  * `graft.plans.GraftExtensions`, and every model store writes, reads
+  * and compacts its frames through `sources.StoreMaintenance`. A
+  * hand-built session, a per-call kernel registration or a store's own
+  * copy of the bundle protocol in `src/main` fails the suite instead of
+  * drifting the benched, verified and spec'd plans apart again.
   */
 class SessionDriftSpec extends AnyFunSuite {
 
@@ -33,5 +35,18 @@ class SessionDriftSpec extends AnyFunSuite {
 
   test("no kernel registration outside the registry") {
     assert(filesContaining("GraftFunctions.register(").isEmpty)
+  }
+
+  test("the store protocol lives only in StoreMaintenance") {
+    val stores = sources.map(_._1)
+      .filter(_.startsWith("scala/graft/sources/")).toSet --
+      Set("scala/graft/sources/StoreMaintenance.scala",
+        "scala/graft/sources/Sinks.scala")
+    assert(stores.nonEmpty, "no store sources found under src/main")
+    for (needle <- Seq("repartitionByRange", "StoreMaintenance.staging(",
+        "StoreMaintenance.recover(", "StoreMaintenance.swap(",
+        "getFileSystem", "private def checkFormat"))
+      assert((filesContaining(needle) & stores).isEmpty,
+        s"$needle outside StoreMaintenance: ${filesContaining(needle) & stores}")
   }
 }

@@ -748,6 +748,7 @@ class SinksSpec extends SparkSpec {
     stamp(lm, "0")
     refusal("lm score")(sources.LmModel.scoreFrom(docs, lm))
     refusal("lm append")(sources.LmModel.append(docs, lm))
+    refusal("lm refreshCuts")(sources.LmModel.refreshCuts(docs, lm))
     sources.LmModel.write(docs, lm, nShards = 1)
     assert(marker(lm) == sources.LmModel.FormatVersion.toString)
 
@@ -863,6 +864,30 @@ class SinksSpec extends SparkSpec {
     val d = tick().collect().head
     assert(d.getAs[Long]("img_hist") == 1L && d.getAs[Long]("accept") == 0L,
       s"the restored frame must flag the copy: $d")
+    // the graph store compacts through the same staging: an append
+    // into a moved-aside edges/ would start a fresh frame holding only
+    // the delta, and the next compact's recovery would keep it and
+    // delete .edges.old — the append is refused and compact restores
+    val gs = base.resolve("graph").toString
+    sources.GraphStore.write(Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L))
+      .toDF("src", "dst", "w"), gs)
+    def rank() = sources.GraphStore.pagerankFrom(spark, gs)
+      .collect().map(_.toSeq.toList).toSet
+    val wantRank = rank()
+    val edgesOld = new java.io.File(s"$gs/.edges.old")
+    java.nio.file.Files.move(new java.io.File(s"$gs/edges").toPath,
+      edgesOld.toPath)
+    val asideFiles = edgesOld.list().toSet
+    val appendRefused = intercept[IllegalStateException](
+      sources.GraphStore.append(Seq((1L, 3L, 5L)).toDF("src", "dst", "w"), gs))
+    assert(appendRefused.getMessage.contains(".edges.old"),
+      appendRefused.getMessage)
+    assert(!new java.io.File(s"$gs/edges").exists() &&
+      edgesOld.list().toSet == asideFiles,
+      "a refused append must leave the moved-aside frame as it was")
+    sources.GraphStore.compact(spark, gs)
+    assert(!edgesOld.exists() && rank() == wantRank,
+      "compact must restore the moved-aside edges")
   }
 
   test("sink_graph: rank from the reloaded store == in-line; deltas append, compact folds") {
